@@ -1,7 +1,7 @@
 """CDC benchmark for tiflow_spark: one command, seed-fixed workloads,
 oracle-checked outputs.
 
-    python3 perfbench/run.py --workload bulk-replay --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload tail-lag --seed 1 --seconds 10 --trace 0
 
 Runs one workload (see ``workloads.WORKLOADS``) against the public API of the
 ``tiflow_spark`` package found next to this directory, in a local[nproc]
@@ -9,7 +9,8 @@ Spark session. Stdout carries one ``{"record": ...}`` line (host, versions,
 every named end-to-end figure with its unit, producer lateness, tracing
 overhead) and, as the last line, the result object
 ``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0`` reports the
-end-to-end metrics of BENCHMARK.json, ``--trace 1`` the per-layer ones.
+end-to-end metrics of BENCHMARK.json, ``--trace 1`` the per-layer ones; the
+workload names, metric names and units are read from that file.
 
 Everything the run writes lives under ``.bench_work/`` in the checkout; the
 oracle digest cache survives between runs, the rest is removed at exit.
@@ -29,12 +30,13 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 WORK = ROOT / ".bench_work"
-WORKLOAD_NAMES = ("bulk-replay", "tail-lag", "mq-relay")
+SPEC = json.loads((ROOT / "BENCHMARK.json").read_text())
 
 
 def _parse(argv):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True, choices=WORKLOAD_NAMES)
+    ap.add_argument("--workload", required=True,
+                    choices=[w["name"] for w in SPEC["workloads"]])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True,
                     help="measurement window per run")
@@ -57,6 +59,12 @@ def _redirect_jvm_stderr(log_path: Path):
     os.dup2(fd, 2)
     os.close(fd)
     sys.stderr = os.fdopen(saved, "w", buffering=1)
+
+
+def _cpu_ticks() -> list[int]:
+    """The host's cumulative CPU ticks by state, from /proc/stat."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
 
 
 def main(argv=None) -> int:
@@ -101,6 +109,7 @@ def main(argv=None) -> int:
         "python": platform.python_version(), "spark": pyspark.__version__,
         "loadavg_before": list(os.getloadavg()),
     }
+    ticks = _cpu_ticks()
     try:
         res = workloads.run(ctx)
     except Exception:
@@ -112,15 +121,28 @@ def main(argv=None) -> int:
         shutil.rmtree(run_dir, ignore_errors=True)
         return 1
     record["loadavg_after"] = list(os.getloadavg())
+    # the share of CPU time the hypervisor gave to other guests: a high
+    # figure means the host, not the engine, set this run's times
+    d = [b - a for a, b in zip(ticks, _cpu_ticks())]
+    record["host_steal_frac"] = d[7] / max(sum(d), 1)
     record.update(res.record)
     print(json.dumps({"record": record}, sort_keys=True))
-    metrics = res.layer_metrics if args.trace else res.e2e_metrics
     correct = res.failed == 0
+    if args.trace:
+        # a layer the workload does not exercise reads 0
+        values = {m["name"]: res.layer_metrics.get(m["name"], 0.0)
+                  for m in SPEC["per_layer"]}
+    else:
+        values = {m["name"]: res.e2e_metrics[m["name"]]
+                  for m in SPEC["end_to_end"] if m["name"] in res.e2e_metrics}
+        correct = correct and len(values) == len(SPEC["end_to_end"])
+    units = {m["name"]: m["unit"] for m in SPEC["end_to_end"] + SPEC["per_layer"]}
     print(json.dumps({
         "correct": correct,
         "attempted": res.attempted,
         "failed": res.failed,
-        "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
+        "metrics": {k: {"value": float(v), "unit": units[k]}
+                    for k, v in values.items()},
     }))
     if not correct:
         _tail_log(run_dir / "driver.log")

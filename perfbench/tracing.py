@@ -39,7 +39,6 @@ SPANS = [
     ("tiflow_spark.engine", "ChangefeedEngine", "advance_to", "engine.advance_to"),
     ("tiflow_spark.engine", "ChangefeedEngine", "validate_applied_rows",
      "engine.validate_applied_rows"),
-    ("tiflow_spark.engine", "MultiTableEngine", "run", "engine.multi_run"),
     ("tiflow_spark.lake", "LakeTable", "create", "lake.create"),
     ("tiflow_spark.lake", "LakeTable", "merge", "lake.merge"),
     ("tiflow_spark.lake", "LakeTable", "_write_data", "lake.write_data"),
@@ -54,45 +53,6 @@ SPANS = [
     ("tiflow_spark.sinks.mq", None, "topic_to_log", "mq.relay"),
 ]
 CHECKSUM_SPANS = {"lake.checksums", "lake.verify"}
-
-# The per-layer metrics, in BENCHMARK.json order. Times, bytes, calls and
-# jobs are per traced operation (see README.md).
-LAYER_UNITS = {
-    "engine.control_read.s": "s",
-    "engine.contract_validate.s": "s",
-    "engine.apply.self_s": "s",
-    "engine.fold.shuffle_bytes": "bytes",
-    "engine.apply.calls": "count",
-    "engine.apply.spark_jobs": "count",
-    "engine.validate_rows.s": "s",
-    "lake.create.s": "s",
-    "lake.merge.self_s": "s",
-    "lake.write.s": "s",
-    "lake.merge.shuffle_bytes": "bytes",
-    "lake.merge.task_skew": "ratio",
-    "lake.footer_stats.s": "s",
-    "lake.footer_stats.calls": "count",
-    "lake.commit.s": "s",
-    "lake.checksum.s": "s",
-    "lake.manifest_bytes": "bytes",
-    "lake.buckets_rewritten_frac": "ratio",
-    "lake.rows_written_per_key_changed": "ratio",
-    "lake.bytes_written": "bytes",
-    "streaming.trigger_ms": "ms",
-    "streaming.add_batch_ms": "ms",
-    "streaming.overhead_ms": "ms",
-    "streaming.marks_per_epoch": "count",
-    "mq.publish.s": "s",
-    "mq.write_epoch.s": "s",
-    "mq.relay.s": "s",
-    "mq.topic_bytes": "bytes",
-    "mq.codegen_fallbacks": "count",
-    "spark.jobs": "count",
-    "spark.executor_busy_frac": "ratio",
-    "jvm.gc_s": "s",
-    "trace.overhead_frac": "ratio",
-}
-
 
 class Span:
     __slots__ = ("sid", "name", "parent", "t0", "t1")
@@ -244,7 +204,7 @@ class Tracer:
         per = 1.0 / max(n_ops, 1)
         self.span_table = {
             name: {"calls": calls[name], "total_s": total[name],
-                   "self_s": own[name]}
+                   "self_s": own[name], "per_op_s": total[name] * per}
             for name in sorted(total)
         }
         return {

@@ -51,41 +51,45 @@ SETUP_REPS = 3
 DRIVER_MEM = "2g"
 ADD_NOTE = (0.5, {"action": "add_column", "name": "note", "type": "string",
                   "default": ""})
-MQ_WIRES = ("open-json", "craft")
+# mq-relay times one wire, so that its figures measure one codec. The binary
+# wire costs 10-25 s a crossing, mostly fixed; it runs once, in trace mode
+# only, and its figures go to the record.
+MQ_WIRE = "open-json"
+MQ_BINARY_WIRE = "craft"
 # tail-lag has no DDL: a DDL epoch is slower than its neighbours, and where
 # it falls among a run's few epochs would set the lag percentiles
-DDL_PLANS = {"bulk-replay": [ADD_NOTE], "tail-lag": [], "mq-relay": [ADD_NOTE]}
+DDL_PLANS = {"tail-lag": [], "mq-relay": [ADD_NOTE]}
 
 # Feed shapes. Every feed: Zipf keys, 5% of events on one hot key.
 FEEDS = {
-    "bulk-replay": {
-        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=60_000,
-                     resolved_every=3_000),
-        "tiny": dict(n_convs=60, turns_per_conv=4, n_changes=600,
-                     resolved_every=100),
-    },
     # one segment per resolved mark; the first WARM_MARKS are published
     # before the clock starts, the rest on a fixed schedule
     "tail-lag": {
-        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=62_400,
-                     resolved_every=300),
+        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=19_200,
+                     resolved_every=150),
         "tiny": dict(n_convs=60, turns_per_conv=4, n_changes=600,
                      resolved_every=50),
     },
     "mq-relay": {
-        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=20_000,
-                     resolved_every=2_000),
+        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=10_000,
+                     resolved_every=1_000),
         "tiny": dict(n_convs=60, turns_per_conv=4, n_changes=600,
                      resolved_every=100),
     },
 }
 WARM_MARKS = {"full": 8, "tiny": 4}
-# tail-lag's schedule runs for this many times --seconds: an epoch costs
-# about 4.5 s on 4 cores, and the lag percentiles need four or more
-# complete epochs to be steady from run to run
+# tail-lag's schedule starts with a warm part of TAIL_WARM_X × --seconds,
+# whose marks are checked but not measured: epoch times keep falling over a
+# fresh JVM's first epochs. The measured part runs TAIL_SCHEDULE_X ×
+# --seconds: an epoch costs about 4 s on 4 cores, and the lag percentiles
+# need four or more complete epochs to be steady from run to run.
+TAIL_WARM_X = 0.4
 TAIL_SCHEDULE_X = 2
-MIN_OPS = 4          # bulk-replay: timed replays per run, whatever
+MIN_OPS = 3          # mq-relay: timed operations per run, whatever
                      # ctx.seconds says
+WARM_OPS = 1         # mq-relay: untimed round trips first. A second one
+                     # would cost 7-9 s of the run budget for about 10%
+                     # off the first timed round trip.
 DRAIN_S = 45.0       # tail-lag: a mark not committed this long after the
                      # last scheduled publish counts as failed
 LATE_LIMIT_S = 0.25  # tail-lag: producer lateness that makes a run invalid
@@ -95,7 +99,7 @@ LATE_LIMIT_S = 0.25  # tail-lag: producer lateness that makes a run invalid
 class Result:
     attempted: int = 0
     failed: int = 0
-    e2e_metrics: dict = field(default_factory=dict)    # name -> (value, unit)
+    e2e_metrics: dict = field(default_factory=dict)    # name -> value
     layer_metrics: dict = field(default_factory=dict)
     record: dict = field(default_factory=dict)
 
@@ -133,11 +137,11 @@ class Context:
         conf = {
             "spark.driver.memory": DRIVER_MEM,
             "spark.sql.warehouse.dir": str(self.run_dir / "warehouse"),
+            # the heap starts small and grows with use, so peak RSS shows
+            # how much heap the engine needed
             "spark.driver.extraJavaOptions":
                 f"-Djava.io.tmpdir={self.run_dir / 'tmp'} -XX:-UsePerfData "
-                # a fully committed heap: peak RSS then does not depend on
-                # when the heap happened to grow
-                f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
+                "-XX:+UseParallelGC",
         }
         if self.trace:
             (self.run_dir / "eventlog").mkdir()
@@ -261,7 +265,8 @@ def corrupt_one_file(files: list[Path]) -> str:
                 continue
             vals = t.column(i).to_pylist()
             vals[0] = f"corrupted-{vals[0]}"
-            pq.write_table(t.set_column(i, f, pa.array(vals, f.type)), fp)
+            pq.write_table(t.set_column(i, f, pa.array(vals, f.type)), fp,
+                           coerce_timestamps="us", allow_truncated_timestamps=True)
             # drop the Hadoop checksum sidecar so the change stays silent
             fp.with_name(f".{fp.name}.crc").unlink(missing_ok=True)
             return str(fp)
@@ -281,6 +286,13 @@ def peak_rss_mb(ctx: Context) -> float:
                 if line.startswith("VmHWM:"):
                     kb += int(line.split()[1])
     return kb / 1024.0
+
+
+def jvm_peak_heap_mb(ctx: Context) -> float:
+    """Sum of the JVM heap pools' peak used bytes, from MemoryPoolMXBeans."""
+    mf = ctx.spark._jvm.java.lang.management.ManagementFactory
+    return sum(p.getPeakUsage().getUsed() for p in mf.getMemoryPoolMXBeans()
+               if p.getType().name() == "HEAP") / 2**20
 
 
 def manifest_epochs(table: LakeTable) -> list[dict]:
@@ -349,19 +361,18 @@ def lake_counts(epochs: list[dict], keys: KeysChanged) -> dict:
 def finish(ctx: Context, res: Result, *, throughput, lat, setup_s, ops,
            untraced_lat=None, traced_lat=None, extra_layer=None) -> None:
     """Fill the end-to-end metrics, and in trace mode the per-layer ones."""
-    res.record["peak_rss_mb"] = peak_rss_mb(ctx)
+    res.record["jvm_peak_heap_mb"] = jvm_peak_heap_mb(ctx)
     res.e2e_metrics = {
-        "throughput_per_s": (throughput, "1/s"),
-        "latency_p50_s": (pctl(lat, 50), "s"),
-        "latency_p90_s": (pctl(lat, 90), "s"),
-        "setup_s": (setup_s, "s"),
-        "peak_rss_mb": (res.record["peak_rss_mb"], "MB"),
+        "throughput_per_s": throughput,
+        "latency_p50_s": pctl(lat, 50),
+        "latency_p90_s": pctl(lat, 90),
+        "setup_s": setup_s,
+        "peak_rss_mb": peak_rss_mb(ctx),
     }
     res.record["latency_samples"] = len(lat)
     if len(lat) <= 32:
         res.record["latencies_s"] = [round(x, 3) for x in lat]
-    res.record["e2e"] = {k: {"value": v, "unit": u}
-                         for k, (v, u) in res.e2e_metrics.items()}
+    res.record["e2e"] = dict(res.e2e_metrics)
     tracer = ctx.tracer
     ctx.stop()
     if tracer is None:
@@ -379,8 +390,7 @@ def finish(ctx: Context, res: Result, *, throughput, lat, setup_s, ops,
             "traced_latency_p50_s": traced,
             "traced_minus_untraced_s": traced - untraced,
         }
-    res.layer_metrics = {k: (float(layer.get(k, 0.0)), unit)
-                         for k, unit in tracing.LAYER_UNITS.items()}
+    res.layer_metrics = layer
 
 
 def _guard(res: Result, what: str, fn) -> bool:
@@ -397,89 +407,6 @@ def _guard(res: Result, what: str, fn) -> bool:
 def _trace_op(ctx: Context, i: int) -> bool:
     """Trace mode alternates untraced and traced operations."""
     return ctx.tracer is not None and i % 2 == 1
-
-
-# ----------------------------------------------------------- bulk-replay
-def bulk_replay(ctx: Context, res: Result) -> None:
-    """Backlog replay: bootstrap a fresh table, then one coalesced epoch
-    (``barrier_stride=0``) over the whole feed; closed loop, one replay at
-    a time."""
-    spark = ctx.spark
-
-    def new_engine(feed, path: Path) -> ChangefeedEngine:
-        return ChangefeedEngine(feed.log_path,
-                                LakeTable(str(path), num_buckets=NUM_BUCKETS))
-
-    def one_setup(i):
-        d = ctx.run_dir / f"setup{i}"
-        feed = ctx.generate(d / "feed")
-        eng = new_engine(feed, d / "target")
-        eng.bootstrap(spark, feed.base_path)
-        return feed, eng
-
-    setup_s, setups = setup_reps(one_setup)
-    feed = setups[0][0]
-    want, oracle_s = ctx.cached("table", lambda: table_digest(
-        tf_oracle.sequential_apply(feed.base_path, feed.log_path)))
-    n_dml = dml_events(feed.log_path).num_rows
-    res.record.update(oracle_s=oracle_s, events=n_dml,
-                      base_rows=feed.n_base_rows, shape="closed loop, 1 client")
-
-    def check(eng) -> bool:
-        if ctx.corrupt:
-            corrupt_one_file(live_files(eng.table))
-        return lake_digest(ctx, eng.table) == want
-
-    # warm-up: replay the tables setup bootstrapped; replay times keep
-    # falling for the first few replays of a fresh JVM
-    def warm_up(eng) -> bool:
-        eng.run(spark, barrier_stride=0)
-        return check(eng)
-
-    t0 = time.perf_counter()
-    for _, eng in setups:
-        _guard(res, "warm-up replay", lambda: warm_up(eng))
-    res.record["warmup_s"] = time.perf_counter() - t0
-
-    replay_s, boot_s, by_trace = [], [], {False: [], True: []}
-    last = None
-    t_end = time.perf_counter() + ctx.seconds
-    min_ops = MIN_OPS * (2 if ctx.tracer else 1)
-    i = 0
-    while i < min_ops or time.perf_counter() < t_end:
-        eng = new_engine(feed, ctx.run_dir / f"op{i}")
-        traced = _trace_op(ctx, i)
-
-        def op():
-            with tracing.maybe(ctx.tracer, traced):
-                t0 = time.perf_counter()
-                eng.bootstrap(spark, feed.base_path)
-                t1 = time.perf_counter()
-                eng.run(spark, barrier_stride=0)
-                t2 = time.perf_counter()
-            boot_s.append(t1 - t0)
-            replay_s.append(t2 - t1)
-            by_trace[traced].append(t2 - t1)
-            return check(eng)
-
-        _guard(res, f"replay {i}", op)
-        last = eng
-        i += 1
-
-    keys = KeysChanged(feed.log_path)
-    counts = lake_counts(manifest_epochs(last.table), keys)
-    res.record.update({
-        "ops": len(replay_s),
-        "replay_events_per_s": {"value": n_dml / statistics.median(replay_s),
-                                "unit": "1/s"},
-        "bootstrap_rows_per_s": {"value": feed.n_base_rows
-                                 / statistics.median(boot_s), "unit": "1/s"},
-        "lake_counts": counts,
-    })
-    finish(ctx, res, throughput=n_dml / statistics.median(replay_s),
-           lat=replay_s, setup_s=setup_s, ops=len(by_trace[True]),
-           untraced_lat=by_trace[False], traced_lat=by_trace[True],
-           extra_layer=counts)
 
 
 # -------------------------------------------------------------- tail-lag
@@ -577,11 +504,12 @@ def tail_lag(ctx: Context, res: Result) -> None:
     want, oracle_s = ctx.cached("table", lambda: table_digest(
         tf_oracle.sequential_apply(feed.base_path, feed.log_path)))
     warm, sched = segs[:n_warm], segs[n_warm:]
-    schedule_s = TAIL_SCHEDULE_X * ctx.seconds
+    warm_s = TAIL_WARM_X * ctx.seconds
+    schedule_s = warm_s + TAIL_SCHEDULE_X * ctx.seconds
     interval = schedule_s / len(sched)
     res.record.update(
         oracle_s=oracle_s, base_rows=feed.n_base_rows, marks_offered=len(sched),
-        schedule_s=schedule_s, offered_marks_per_s=1 / interval,
+        schedule_s=schedule_s, warm_s=warm_s, offered_marks_per_s=1 / interval,
         offered_events_per_s=sum(s["dml"] for s in sched) / schedule_s,
         shape="open loop, fixed schedule",
     )
@@ -629,14 +557,25 @@ def tail_lag(ctx: Context, res: Result) -> None:
 
     epochs = manifest_epochs(eng.table)
     t_first, last_due = prod.due[0], prod.due[-1]
+    t_measure = t_first + warm_s
     sched_epochs = [e for e in epochs if e["commit_time"] >= t_first]
-    # Lag percentiles count the marks published up to the last commit
-    # before the schedule ended. Later marks sit in a window the end of the
-    # schedule cut short: they can only draw the upper part of the lag
-    # range, by an amount set by where the end fell in an epoch. They are
-    # still checked for commitment.
+    # Lag percentiles count the marks published after the warm part, up to
+    # the last commit before the schedule ended. Later marks sit in a
+    # window the end of the schedule cut short: they can only draw the
+    # upper part of the lag range, by an amount set by where the end fell
+    # in an epoch. All marks are checked for commitment.
     cut = max((e["commit_time"] for e in sched_epochs
                if e["commit_time"] <= last_due), default=last_due)
+    # Throughput is the DML committed by the measured epochs after the
+    # first one, up to the cut, over the time between their commits: the
+    # offered rate while the engine keeps up, less once a backlog grows. A
+    # run too short for two such epochs takes every epoch, and with only
+    # one, the time since the first publish.
+    commits = [e["commit_time"] for e in sched_epochs
+               if t_measure <= e["commit_time"] <= cut]
+    if len(commits) < 2:
+        commits = [t_first] + [e["commit_time"] for e in sched_epochs]
+    since, until = commits[0], commits[-1]
     lags, window_dml, traced_lags, untraced_lags = [], 0, [], []
     committed = 0
     for i, s in enumerate(sched):
@@ -645,11 +584,12 @@ def tail_lag(ctx: Context, res: Result) -> None:
         if not res.check(t is not None):
             continue
         committed += 1
-        if prod.due[i] > cut:
+        if since < t <= until:
+            window_dml += s["dml"]
+        if not t_measure <= prod.due[i] <= cut:
             continue
         lag = t - prod.due[i]
         lags.append(lag)
-        window_dml += s["dml"]
         if trace_from[0] is not None:
             (traced_lags if prod.due[i] >= trace_from[0]
              else untraced_lags).append(lag)
@@ -674,11 +614,12 @@ def tail_lag(ctx: Context, res: Result) -> None:
     if not lags:
         ctx.stop()
         return
-    traced_epochs = (
-        sum(1 for e in sched_epochs if e["commit_time"] >= trace_from[0])
-        if trace_from[0] is not None else 0
+    # a traced operation is one micro-batch the tracing window saw whole
+    traced_epochs = sum(
+        1 for sp in (ctx.tracer.spans if ctx.tracer is not None else [])
+        if sp.name == "streaming.apply_batch" and sp.t1 is not None
     )
-    finish(ctx, res, throughput=window_dml / max(cut - t_first, 1e-3),
+    finish(ctx, res, throughput=window_dml / max(until - since, 1e-3),
            lat=lags, setup_s=setup_s, ops=max(traced_epochs, 1),
            untraced_lat=untraced_lags, traced_lat=traced_lags,
            extra_layer={**counts, **stream_stats})
@@ -702,81 +643,125 @@ def streaming_stats(progress, marks: int, epochs: int) -> dict:
 
 # -------------------------------------------------------------- mq-relay
 def mq_relay(ctx: Context, res: Result) -> None:
-    """Publish the feed to a file-backed topic with ``MQChangefeed.run``,
-    then rebuild a log from it with ``topic_to_log``; once per wire
-    (JSON, then binary) per operation pair, closed loop."""
+    """The MQ round trip, closed loop, one operation at a time: publish the
+    feed to a file-backed topic over ``MQ_WIRE`` (``MQChangefeed.run``),
+    rebuild a log from the topic (``topic_to_log``), and replay that log as
+    one coalesced epoch (``barrier_stride=0``) into a freshly bootstrapped
+    table. Trace mode adds one crossing over ``MQ_BINARY_WIRE`` for the
+    record."""
     spark = ctx.spark
     setup_s, feeds = setup_reps(lambda i: ctx.generate(ctx.run_dir / f"setup{i}"))
     feed = feeds[0]
-    (n_dml, want), oracle_s = ctx.cached(
-        "dml-multiset", lambda: dml_multiset_digest(dml_events(feed.log_path)))
-    res.record.update(oracle_s=oracle_s, events=n_dml,
-                      shape="closed loop, 1 client", wires=list(MQ_WIRES))
+    want, oracle_s = ctx.cached("table+dml-multiset", lambda: {
+        "table": table_digest(
+            tf_oracle.sequential_apply(feed.base_path, feed.log_path)),
+        "dml": dml_multiset_digest(dml_events(feed.log_path)),
+    })
+    n_dml = want["dml"][0]
+    res.record.update(oracle_s=oracle_s, events=n_dml, base_rows=feed.n_base_rows,
+                      shape="closed loop, 1 client", wire=MQ_WIRE)
 
-    def crossing(tag: str, wire: str, traced: bool):
-        topic = ctx.run_dir / f"topic-{tag}-{wire}"
-        relay = ctx.run_dir / f"relay-{tag}-{wire}"
-        sink = tf_mq.FileMQSink(str(topic))
+    def crossing(tag: str, wire: str) -> tuple[float, float, tf_mq.FileMQSink, Path]:
+        sink = tf_mq.FileMQSink(str(ctx.run_dir / f"topic-{tag}"))
+        relay = ctx.run_dir / f"relay-{tag}"
+        t0 = time.perf_counter()
+        tf_mq.MQChangefeed(feed.log_path, sink, protocol=wire).run(spark)
+        t1 = time.perf_counter()
+        tf_mq.topic_to_log(spark, sink, str(relay))
+        return t1 - t0, time.perf_counter() - t1, sink, relay
+
+    def round_trip(tag: str, traced: bool) -> tuple[dict, ChangefeedEngine]:
+        """One operation: the times of its steps, and its engine."""
         with tracing.maybe(ctx.tracer, traced):
+            pub, rel, sink, relay = crossing(tag, MQ_WIRE)
+            table = LakeTable(str(ctx.run_dir / f"target-{tag}"),
+                              num_buckets=NUM_BUCKETS)
+            eng = ChangefeedEngine(str(relay), table)
             t0 = time.perf_counter()
-            tf_mq.MQChangefeed(feed.log_path, sink, protocol=wire).run(spark)
+            eng.bootstrap(spark, feed.base_path)
             t1 = time.perf_counter()
-            tf_mq.topic_to_log(spark, sink, str(relay))
+            eng.run(spark, barrier_stride=0)
             t2 = time.perf_counter()
+        topic_bytes = sum(p.stat().st_size for p in Path(sink.path).rglob("*")
+                          if p.is_file())
+        times = {"bootstrap": t1 - t0, "publish": pub, "relay": rel,
+                 "replay": t2 - t1, "op": pub + rel + t2 - t1,
+                 "topic_bytes": topic_bytes}
+        return times, eng
+
+    def check(eng: ChangefeedEngine) -> bool:
+        """The relayed events and the replayed table match the oracle."""
+        if dml_multiset_digest(dml_events(eng.log_path)) != tuple(want["dml"]):
+            return False
         if ctx.corrupt:
-            # largest first: a data segment, not the small control one
-            corrupt_one_file(sorted(relay.glob("*.parquet"),
-                                    key=lambda p: -p.stat().st_size))
-        got = dml_multiset_digest(dml_events(str(relay)))
-        topic_bytes = sum(p.stat().st_size for p in topic.rglob("*") if p.is_file())
-        return t1 - t0, t2 - t1, topic_bytes, got == (n_dml, want)
+            corrupt_one_file(live_files(eng.table))
+        return lake_digest(ctx, eng.table) == want["table"]
 
     t0 = time.perf_counter()
-    _guard(res, "warm-up crossing",
-           lambda: crossing("warm", MQ_WIRES[0], False)[3])
+    for i in range(WARM_OPS):
+        _guard(res, "warm-up round trip",
+               lambda: check(round_trip(f"warm{i}", False)[1]))
     res.record["warmup_s"] = time.perf_counter() - t0
-    pub = {w: [] for w in MQ_WIRES}
-    rel = {w: [] for w in MQ_WIRES}
-    lat, by_trace, topic_bytes = [], {False: [], True: []}, []
+    steps, by_trace, last = [], {False: [], True: []}, None
     t_end = time.perf_counter() + ctx.seconds
-    min_pairs = 2 if ctx.tracer else 1
+    min_ops = MIN_OPS * (2 if ctx.tracer else 1)
     i = 0
-    while i < min_pairs or time.perf_counter() < t_end:
+    while i < min_ops or time.perf_counter() < t_end:
         traced = _trace_op(ctx, i)
-        for wire in MQ_WIRES:
-            def op(wire=wire):
-                p, r, nbytes, ok = crossing(str(i), wire, traced)
-                pub[wire].append(p)
-                rel[wire].append(r)
-                lat.append(p + r)
-                by_trace[traced].append(p + r)
-                if traced:
-                    topic_bytes.append(nbytes)
-                return ok
 
-            _guard(res, f"{wire} crossing {i}", op)
+        def op():
+            nonlocal last
+            times, last = round_trip(str(i), traced)
+            steps.append(times)
+            by_trace[traced].append(times["op"])
+            return check(last)
+
+        _guard(res, f"round trip {i}", op)
         i += 1
+    if not steps:
+        ctx.stop()
+        return
 
-    for w in MQ_WIRES:
-        res.record[f"publish_msgs_per_s.{w}"] = {
-            "value": n_dml / statistics.median(pub[w]), "unit": "1/s"}
-        res.record[f"relay_msgs_per_s.{w}"] = {
-            "value": n_dml / statistics.median(rel[w]), "unit": "1/s"}
+    def median(step: str) -> float:
+        return statistics.median(t[step] for t in steps)
+
+    def rate(value: float) -> dict:
+        return {"value": value, "unit": "1/s"}
+
+    res.record.update({
+        "ops": len(steps),
+        f"publish_msgs_per_s.{MQ_WIRE}": rate(n_dml / median("publish")),
+        f"relay_msgs_per_s.{MQ_WIRE}": rate(n_dml / median("relay")),
+        "replay_events_per_s": rate(n_dml / median("replay")),
+        "bootstrap_rows_per_s": rate(feed.n_base_rows / median("bootstrap")),
+    })
+    if ctx.tracer is not None:
+        def binary() -> bool:
+            pub, rel, _, relay = crossing("binary", MQ_BINARY_WIRE)
+            res.record[f"publish_msgs_per_s.{MQ_BINARY_WIRE}"] = rate(n_dml / pub)
+            res.record[f"relay_msgs_per_s.{MQ_BINARY_WIRE}"] = rate(n_dml / rel)
+            return dml_multiset_digest(dml_events(str(relay))) == tuple(want["dml"])
+
+        _guard(res, f"{MQ_BINARY_WIRE} crossing", binary)
     fallbacks = sum("64 KB" in line for line in
                     (ctx.run_dir / "driver.log").read_text(errors="replace")
                     .splitlines())
     res.record["codegen_fallback_lines"] = fallbacks
-    finish(ctx, res, throughput=n_dml * len(lat) / sum(lat), lat=lat,
+    lat = [t["op"] for t in steps]
+    counts = lake_counts(manifest_epochs(last.table), KeysChanged(feed.log_path))
+    res.record["lake_counts"] = counts
+    finish(ctx, res, throughput=n_dml / statistics.median(lat), lat=lat,
            setup_s=setup_s, ops=len(by_trace[True]),
            untraced_lat=by_trace[False], traced_lat=by_trace[True],
            extra_layer={
+               **counts,
                "mq.codegen_fallbacks": fallbacks,
-               "mq.topic_bytes": statistics.mean(topic_bytes) if topic_bytes else 0,
+               "mq.topic_bytes": statistics.median(
+                   t["topic_bytes"] for t in steps),
            })
 
 
 WORKLOADS = {
-    "bulk-replay": bulk_replay,
     "tail-lag": tail_lag,
     "mq-relay": mq_relay,
 }
