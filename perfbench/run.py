@@ -4,10 +4,10 @@ oracle-checked outputs.
     python3 perfbench/run.py --workload tail-lag --seed 1 --seconds 10 --trace 0
 
 Runs one workload (see ``workloads.WORKLOADS``) against the public API of the
-``tiflow_spark`` package found next to this directory, in a local[nproc]
-Spark session. Stdout carries one ``{"record": ...}`` line (host, versions,
-every named end-to-end figure with its unit, producer lateness, tracing
-overhead) and, as the last line, the result object
+``tiflow_spark`` package found next to this directory, in a local[N] Spark
+session (``workloads.SPARK_CORES``). Stdout carries one ``{"record": ...}``
+line (host, versions, every named end-to-end figure with its unit, producer
+lateness, tracing overhead) and, as the last line, the result object
 ``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0`` reports the
 end-to-end metrics of BENCHMARK.json, ``--trace 1`` the per-layer ones; the
 workload names, metric names and units are read from that file.
@@ -105,7 +105,7 @@ def main(argv=None) -> int:
     record = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "size": args.size, "nproc": os.cpu_count(),
-        "master": f"local[{os.cpu_count()}]",
+        "master": f"local[{workloads.SPARK_CORES[args.workload]}]",
         "python": platform.python_version(), "spark": pyspark.__version__,
         "loadavg_before": list(os.getloadavg()),
     }

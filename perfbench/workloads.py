@@ -49,6 +49,14 @@ DML = ["I", "U", "D"]
 NUM_BUCKETS = 16
 SETUP_REPS = 3
 DRIVER_MEM = "2g"
+# Spark task threads per workload. mq-relay's round trip is mostly
+# driver-side work (job scheduling, the Python driver, the JVM's own
+# threads). On a 4-core VM that shares its host, more task threads made it
+# time the host: at local[2] a round trip took 6.1-11.2 s as other guests'
+# load came and went, at local[1] 6.1-6.3 s over the same minutes.
+# tail-lag's epochs rewrite every bucket of the table and need the task
+# threads: at local[1] an epoch took 7-13 s, against 4-5 s at local[4].
+SPARK_CORES = {"tail-lag": os.cpu_count() or 1, "mq-relay": 1}
 ADD_NOTE = (0.5, {"action": "add_column", "name": "note", "type": "string",
                   "default": ""})
 # mq-relay times one wire, so that its figures measure one codec. The binary
@@ -62,11 +70,10 @@ DDL_PLANS = {"tail-lag": [], "mq-relay": [ADD_NOTE]}
 
 # Feed shapes. Every feed: Zipf keys, 5% of events on one hot key.
 FEEDS = {
-    # one segment per resolved mark; the first WARM_MARKS are published
-    # before the clock starts, the rest on a fixed schedule
+    # one segment per resolved mark, all published on a fixed schedule
     "tail-lag": {
-        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=19_200,
-                     resolved_every=150),
+        "full": dict(n_convs=2_000, turns_per_conv=10, n_changes=11_250,
+                     resolved_every=75),
         "tiny": dict(n_convs=60, turns_per_conv=4, n_changes=600,
                      resolved_every=50),
     },
@@ -77,19 +84,25 @@ FEEDS = {
                      resolved_every=100),
     },
 }
-WARM_MARKS = {"full": 8, "tiny": 4}
-# tail-lag's schedule starts with a warm part of TAIL_WARM_X × --seconds,
-# whose marks are checked but not measured: epoch times keep falling over a
-# fresh JVM's first epochs. The measured part runs TAIL_SCHEDULE_X ×
-# --seconds: an epoch costs about 4 s on 4 cores, and the lag percentiles
-# need four or more complete epochs to be steady from run to run.
-TAIL_WARM_X = 0.4
+# tail-lag's schedule starts with a warm part of TAIL_WARM_TRIGGERS
+# triggers of the stream below, whose marks are checked but not measured.
+# The measured part is TAIL_SCHEDULE_X × --seconds, cut to whole triggers:
+# two at --seconds 10.
+TAIL_WARM_TRIGGERS = 1
 TAIL_SCHEDULE_X = 2
-MIN_OPS = 3          # mq-relay: timed operations per run, whatever
+# tail-lag's stream fires every TAIL_TRIGGER_S seconds, as a deployed tail
+# would; trigger 0 busy-polls the driver. An epoch then takes in a fixed
+# TAIL_TRIGGER_S of feed, and a mark's lag is its wait for the next trigger
+# plus that epoch's time. With trigger 0, a slow stretch of the host made
+# each epoch longer and so the next one bigger: lag grew faster than the
+# host slowed, and its run-to-run spread exceeded 0.3 of the median. The
+# interval leaves room for a fresh JVM's first epoch, about 7 s.
+TAIL_TRIGGER_S = 10.0
+MIN_OPS = 2          # mq-relay: timed operations per run, whatever
                      # ctx.seconds says
-WARM_OPS = 1         # mq-relay: untimed round trips first. A second one
-                     # would cost 7-9 s of the run budget for about 10%
-                     # off the first timed round trip.
+WARM_OPS = 2         # mq-relay: untimed round trips first. After one, the
+                     # next round trip is still 10-40% slower than later
+                     # ones, and it set latency_p90_s.
 DRAIN_S = 45.0       # tail-lag: a mark not committed this long after the
                      # last scheduled publish counts as failed
 LATE_LIMIT_S = 0.25  # tail-lag: producer lateness that makes a run invalid
@@ -152,7 +165,8 @@ class Context:
                 "spark.eventLog.rolling.enabled": "false",
             })
         self.spark = get_spark(f"perfbench-{self.workload}",
-                               cpus=os.cpu_count(), extra_conf=conf)
+                               cpus=SPARK_CORES[self.workload],
+                               extra_conf=conf)
         if self.trace:
             self.tracer = tracing.Tracer(self.spark)
             self.tracer.install()
@@ -378,7 +392,7 @@ def finish(ctx: Context, res: Result, *, throughput, lat, setup_s, ops,
     if tracer is None:
         return
     layer = tracer.layer_metrics(ctx.run_dir / "eventlog", ops,
-                                 os.cpu_count())
+                                 SPARK_CORES[ctx.workload])
     layer.update(extra_layer or {})
     res.record["traced_ops"] = ops
     res.record["spans"] = tracer.span_table
@@ -480,11 +494,10 @@ def checkpoint_ts(table: LakeTable) -> int:
 
 def tail_lag(ctx: Context, res: Result) -> None:
     """Checkpoint lag while tailing: a Structured Streaming tail
-    (processing-time trigger 0, continuous validator on) over a log that a
-    producer thread extends one resolved mark at a time on a fixed
-    schedule (open loop)."""
+    (processing-time trigger every ``TAIL_TRIGGER_S``, continuous validator
+    on) over a log that a producer thread extends one resolved mark at a
+    time on a fixed schedule (open loop)."""
     spark = ctx.spark
-    n_warm = WARM_MARKS[ctx.size]
 
     def one_setup(i):
         d = ctx.run_dir / f"setup{i}"
@@ -500,51 +513,50 @@ def tail_lag(ctx: Context, res: Result) -> None:
 
     setup_s, setups = setup_reps(one_setup)
     feed, eng, d = setups[-1]
+    if ctx.corrupt:
+        corrupt_one_file(live_files(eng.table))
+    trigger = TAIL_TRIGGER_S
+    t0 = time.time()
+    stream = StreamingChangefeed(eng, str(d / "stream-checkpoint"))
+    q = stream.start(spark, trigger_seconds=trigger)
     segs = split_segments(feed.log_path, d / "staging")
     want, oracle_s = ctx.cached("table", lambda: table_digest(
         tf_oracle.sequential_apply(feed.base_path, feed.log_path)))
-    warm, sched = segs[:n_warm], segs[n_warm:]
-    warm_s = TAIL_WARM_X * ctx.seconds
-    schedule_s = warm_s + TAIL_SCHEDULE_X * ctx.seconds
-    interval = schedule_s / len(sched)
+    measured = max(1, int(TAIL_SCHEDULE_X * ctx.seconds / trigger))
+    warm_s = TAIL_WARM_TRIGGERS * trigger
+    schedule_s = warm_s + measured * trigger
+    interval = schedule_s / len(segs)
+    n_warm = round(warm_s / interval)
+    trace_at = n_warm + (len(segs) - n_warm) // 2
     res.record.update(
-        oracle_s=oracle_s, base_rows=feed.n_base_rows, marks_offered=len(sched),
-        schedule_s=schedule_s, warm_s=warm_s, offered_marks_per_s=1 / interval,
-        offered_events_per_s=sum(s["dml"] for s in sched) / schedule_s,
+        oracle_s=oracle_s, base_rows=feed.n_base_rows, marks_offered=len(segs),
+        schedule_s=schedule_s, warm_s=warm_s, trigger_s=trigger,
+        offered_marks_per_s=1 / interval,
+        offered_events_per_s=sum(s["dml"] for s in segs) / schedule_s,
         shape="open loop, fixed schedule",
     )
-
-    # warm-up: the first marks go live at once; the clock starts when the
-    # stream has committed them
-    for s in warm:
-        publish_segment(d / "log", s)
-    stream = StreamingChangefeed(eng, str(d / "stream-checkpoint"))
-    q = stream.start(spark, trigger_seconds=0)
     try:
-        t0 = time.time()
-        while (checkpoint_ts(eng.table) < warm[-1]["mark_ts"]
-               and time.time() < t0 + 120 and q.isActive):
-            time.sleep(0.02)
-        res.record["warmup_s"] = time.time() - t0
-        if ctx.corrupt:
-            corrupt_one_file(live_files(eng.table))
-
-        trace_from = [None]
+        # The trigger fires on wall-clock multiples of its interval, and the
+        # stream lists the log a little later. The schedule puts a mark a
+        # quarter interval before each trigger and the next one three
+        # quarters after, so every run splits its marks into the same epochs
+        # with the same waits. A slow start of the stream only moves the
+        # warm part's first epoch.
+        start = (time.time() // trigger + 1) * trigger + interval * 0.75
+        res.record["warmup_s"] = start - t0
 
         def on_publish(i):
-            # trace mode: the second half of the schedule runs traced
-            if ctx.tracer is not None and i == len(sched) // 2:
-                trace_from[0] = time.time()
+            # trace mode: the second half of the measured part runs traced
+            if ctx.tracer is not None and i == trace_at:
                 ctx.tracer.start_window()
 
-        prod = Producer(d / "log", sched, time.time() + 0.2, interval,
-                        on_publish)
+        prod = Producer(d / "log", segs, start, interval, on_publish)
         prod.start()
         prod.join()
         if prod.error is not None:
             raise prod.error
         last_due = prod.due[-1]
-        while (checkpoint_ts(eng.table) < sched[-1]["mark_ts"]
+        while (checkpoint_ts(eng.table) < segs[-1]["mark_ts"]
                and time.time() < last_due + DRAIN_S and q.isActive):
             time.sleep(0.02)
         if ctx.tracer is not None:
@@ -556,43 +568,30 @@ def tail_lag(ctx: Context, res: Result) -> None:
         q.stop()
 
     epochs = manifest_epochs(eng.table)
-    t_first, last_due = prod.due[0], prod.due[-1]
-    t_measure = t_first + warm_s
-    sched_epochs = [e for e in epochs if e["commit_time"] >= t_first]
-    # Lag percentiles count the marks published after the warm part, up to
-    # the last commit before the schedule ended. Later marks sit in a
-    # window the end of the schedule cut short: they can only draw the
-    # upper part of the lag range, by an amount set by where the end fell
-    # in an epoch. All marks are checked for commitment.
-    cut = max((e["commit_time"] for e in sched_epochs
-               if e["commit_time"] <= last_due), default=last_due)
-    # Throughput is the DML committed by the measured epochs after the
-    # first one, up to the cut, over the time between their commits: the
-    # offered rate while the engine keeps up, less once a backlog grows. A
-    # run too short for two such epochs takes every epoch, and with only
-    # one, the time since the first publish.
-    commits = [e["commit_time"] for e in sched_epochs
-               if t_measure <= e["commit_time"] <= cut]
-    if len(commits) < 2:
-        commits = [t_first] + [e["commit_time"] for e in sched_epochs]
-    since, until = commits[0], commits[-1]
-    lags, window_dml, traced_lags, untraced_lags = [], 0, [], []
-    committed = 0
-    for i, s in enumerate(sched):
+    sched_epochs = [e for e in epochs if e["commit_time"] >= start]
+    # The warm part's marks are checked but not measured: epoch times keep
+    # falling over a fresh JVM's first epochs.
+    # Throughput is the DML of the measured marks committed after the last
+    # warm mark, over the time from that commit to the last one: the
+    # offered rate while the engine keeps up, less once a backlog grows.
+    lags, measured_dml, traced_lags, untraced_lags = [], 0, [], []
+    committed, since, until = 0, start + warm_s, start + warm_s
+    for i, s in enumerate(segs):
         t = min((e["commit_time"] for e in epochs if e["high_ts"] >= s["mark_ts"]),
                 default=None)
         if not res.check(t is not None):
             continue
         committed += 1
-        if since < t <= until:
-            window_dml += s["dml"]
-        if not t_measure <= prod.due[i] <= cut:
+        if i < n_warm:
+            since = until = t
             continue
+        if t > since:
+            measured_dml += s["dml"]
+            until = max(until, t)
         lag = t - prod.due[i]
         lags.append(lag)
-        if trace_from[0] is not None:
-            (traced_lags if prod.due[i] >= trace_from[0]
-             else untraced_lags).append(lag)
+        if ctx.tracer is not None:
+            (traced_lags if i >= trace_at else untraced_lags).append(lag)
     _guard(res, "final state check", lambda: lake_digest(ctx, eng.table) == want)
 
     keys = KeysChanged(feed.log_path)
@@ -604,7 +603,7 @@ def tail_lag(ctx: Context, res: Result) -> None:
         "lag_p90_s": {"value": pctl(lags, 90) if lags else None, "unit": "s"},
         "marks_committed": committed,
         "epochs": len(sched_epochs),
-        "epoch_commit_times_s": [round(e["commit_time"] - t_first, 3)
+        "epoch_commit_times_s": [round(e["commit_time"] - start, 3)
                                  for e in sched_epochs],
         "producer_late_max_s": late,
         "valid": late <= LATE_LIMIT_S,
@@ -619,7 +618,7 @@ def tail_lag(ctx: Context, res: Result) -> None:
         1 for sp in (ctx.tracer.spans if ctx.tracer is not None else [])
         if sp.name == "streaming.apply_batch" and sp.t1 is not None
     )
-    finish(ctx, res, throughput=window_dml / max(until - since, 1e-3),
+    finish(ctx, res, throughput=measured_dml / max(until - since, 1e-3),
            lat=lags, setup_s=setup_s, ops=max(traced_epochs, 1),
            untraced_lat=untraced_lags, traced_lat=traced_lags,
            extra_layer={**counts, **stream_stats})
