@@ -8,7 +8,7 @@ Two parts:
   (bootstrap CTAS + full single-epoch replay + LWW MERGE commit), reported
   as `cdc_replay` seconds plus `cdc_replay_events_per_sec`.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the host CPU count),
 BENCH_QUERIES (csv subset), BENCH_CDC_EVENTS (override event count).
 """
 
@@ -143,7 +143,7 @@ def bench_cdc_replay(spark, sf: str, cpus: int) -> tuple[float, dict]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = _sf_of(sf_dir)
     subset = os.environ.get("BENCH_QUERIES")
     names = subset.split(",") if subset else HEADLINE

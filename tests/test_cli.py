@@ -268,6 +268,13 @@ def test_config_validation_rejects_unknown_keys(tmp_path, feed):
     with pytest.raises(ValueError, match="missing required"):
         load_config(p2)
 
+    p3 = str(tmp_path / "bad3.toml")
+    with open(p3, "w") as fh:
+        fh.write(f'log = "{f.log_path}"\ntarget = "x"\n'
+                 '[filter]\nsql-patterns = ["ok", "ADD COLUMN ("]\n')
+    with pytest.raises(ValueError, match=r"sql-patterns.*'ADD COLUMN \('"):
+        load_config(p3)
+
 
 def test_engine_filter_null_semantics(spark):
     """A drop-predicate that evaluates to NULL must KEEP the row (it did

@@ -643,3 +643,54 @@ def test_online_ddl_pt_osc_flow(spark, tmp_path):
                          source_tables={"app.users", "app.aux"},
                          shard_merge=True, online_ddl="pt-osc"),
     )
+
+
+def test_online_ddl_cutover_ddl_matches_sql_pattern_by_real_table(spark,
+                                                                   tmp_path):
+    """The cut-over ALTER a gh-ost rename splices in reaches the sql-pattern
+    filter with its REAL table name, not the default table's: a pattern
+    qualified with ``app.users`` skips it in both the batch run and the
+    streaming tick unit (advance_to), matching the oracle."""
+    base = write_base(
+        os.path.join(str(tmp_path), "base", "t.parquet"),
+        [("c1", 0, "user", "v0", None, "2024-01-01T00:00:00")],
+    )
+    events = [
+        ev(0, "DDL", 102, ddl={"action": "add_column", "name": "note",
+                               "type": "string", "default": "d"},
+           tbl="app._users_gho"),
+        ev(1, "U", 105, "c1", 0, pl("mid"), tbl="app.users", ver=1),
+        ev(2, "R", 150),
+        ev(3, "DDL", 200, ddl={"action": "rename_table",
+                               "from": "app._users_gho", "to": "app.users"},
+           tbl="app.users"),
+        ev(4, "I", 201, "c2", 0, pl("post"), tbl="app.users", ver=1),
+        ev(5, "R", 300),
+    ]
+    log_dir = write_log(os.path.join(str(tmp_path), "log"), events)
+    pats = [r"^ALTER TABLE app\.users ADD COLUMN note"]
+
+    def mk(tag):
+        eng = MultiTableEngine(
+            log_dir,
+            tables={"users": LakeTable(str(tmp_path / f"tgt_{tag}"),
+                                       num_buckets=2)},
+            rules=[("app.*", "users")],
+            online_ddl="gh-ost",
+            sql_patterns=pats,
+        )
+        eng.bootstrap(spark, {"users": os.path.dirname(base)})
+        return eng
+
+    batch = mk("batch")
+    batch.run(spark)
+    ticked = mk("ticked")
+    ticked.advance_to(spark, 150)
+    ticked.advance_to(spark, 300)
+    want = sequential_apply(base, log_dir, source_tables={"app.users"},
+                            shard_merge=True, online_ddl="gh-ost",
+                            sql_patterns=pats)
+    assert "note" not in want.columns
+    for eng in (batch, ticked):
+        assert [v.version for v in eng.tables["users"].registry().versions] == [1]
+        assert_tables_equal(eng.final_state(spark, "users").toPandas(), want)

@@ -32,6 +32,7 @@ Example::
 from __future__ import annotations
 
 import os
+import re
 import tomllib
 from dataclasses import dataclass, field
 
@@ -108,6 +109,13 @@ def load_config(path: str) -> ChangefeedConfig:
     if f_unknown:
         raise ValueError(f"unknown [filter] keys: {sorted(f_unknown)}")
     sql_patterns = [str(p) for p in filt.get("sql-patterns", [])]
+    for pat in sql_patterns:
+        try:
+            re.compile(pat)
+        except re.error as e:
+            raise ValueError(
+                f"[filter] sql-patterns: bad regex {pat!r}: {e}"
+            ) from None
     if sql_patterns and raw.get("sink", {}).get("type") == "mq":
         raise ValueError(
             "[filter] sql-patterns applies to the lake apply path only "

@@ -17,7 +17,9 @@ buckets, worker pools) collapses into shuffle partitioning: the key-hash
 shuffle of the fold IS causality (same key → same partition,
 cdc/sink/causality.go:29-142), and Spark's external sort/spill subsumes the
 unified sorter (cdc/sorter/unified/*). The driver plays the owner: barrier
-selection (cdc/owner/changefeed.go:456-501) and DDL serialization.
+selection (``plan_epoch``, cdc/owner/changefeed.go:456-501) and DDL
+serialization, in one epoch loop (``EpochDriver``) shared by the
+single-table, multi-table and MQ front ends, batch and streaming alike.
 
 Exactly-once: the epoch fence in the manifest commit makes re-running any
 epoch a no-op, and resume reads the checkpoint from the committed manifest —
@@ -30,7 +32,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from tiflow_spark.lake import BUCKET_COL, LakeTable, bucket_expr
@@ -159,10 +161,11 @@ def write_control_coverage(log_path: str) -> None:
 
 
 def read_control(spark, log_path: str, low_ts: int, cols) -> list:
-    """Control rows (R + DDL) above ``low_ts``. Prefers the
-    ``log/_control`` sidecar — the producer mirrors control rows there (the
-    generator and test helpers both do), and the underscore prefix hides it
-    from the main data scan — so the control plane reads a handful of rows
+    """Control rows (R + DDL) above ``low_ts``, ordered by (commit_ts,
+    seq); ``cols`` must include both. Prefers the ``log/_control`` sidecar
+    — the producer mirrors control rows there (the generator and test
+    helpers both do), and the underscore prefix hides it from the main data
+    scan — so the control plane reads a handful of rows
     instead of scanning the whole log for them (at 10^10 events the full
     scan would dominate the epoch loop). Logs without a sidecar (raw
     appends) fall back to the full scan — as does a *stale* sidecar: if the
@@ -197,14 +200,16 @@ def read_control(spark, log_path: str, low_ts: int, cols) -> list:
         elif _max_mtime(ctl_dir) >= _max_mtime(log_path):
             src_path = ctl_dir
     src = spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(src_path)
-    return (
+    rows = (
         src.filter(
             F.col("op").isin(OP_RESOLVED, OP_DDL) & (F.col("commit_ts") > low_ts)
         )
         .select(*cols)
-        .orderBy("commit_ts", "seq")
         .collect()
     )
+    # ordered on the driver: the rows are collected anyway, and a Spark sort
+    # of this tiny set costs extra jobs (sampling + exchange) on every call
+    return sorted(rows, key=lambda r: (r["commit_ts"], r["seq"]))
 
 
 @dataclass
@@ -314,16 +319,210 @@ def decode_events(
     return parsed.select(*cols)
 
 
-def pick_barrier(barriers: list[int], stride: int) -> int:
-    """Barrier-stride selection shared by every replay loop: stride <= 0
-    coalesces all outstanding marks into one epoch (max throughput);
-    stride k takes the k-th outstanding mark (k=1 = one epoch per mark)."""
-    if stride <= 0:
-        return barriers[-1]
-    return barriers[min(stride, len(barriers)) - 1]
+@dataclass(frozen=True)
+class EpochPlan:
+    """The next epoch of a changefeed, as ``plan_epoch`` picks it."""
+
+    barrier_ts: int
+    # the earliest resolved-ts promise covering the barrier: events at or
+    # below it all have seq <= this (the resume guard, and the next run's
+    # validation floor once committed); None = no promise to record
+    barrier_seq: int | None
+    syncpoint: bool
+    # DDL rows in (min checkpoint, barrier], commit order, one shape: Rows
+    # with op/commit_ts/seq/ddl/tbl (tbl None when the read carried none)
+    ddl_rows: list
+    # targets still behind the barrier, in checkpoint-dict order; a target
+    # already past it (it committed before a crash, others did not) skips
+    targets: tuple[str, ...]
 
 
-class ChangefeedEngine:
+def _ddl_row(r) -> Row:
+    d = r if isinstance(r, dict) else r.asDict()
+    return Row(op=OP_DDL, commit_ts=d["commit_ts"], seq=d["seq"],
+               ddl=d["ddl"], tbl=d.get("tbl"))
+
+
+def plan_epoch(
+    control: list,
+    checkpoints: dict[str, int],
+    stride: int = 0,
+    target_ts: int | None = None,
+    syncpoint_every: int | None = None,
+) -> EpochPlan | None:
+    """The barrier policy of every front end — the owner's one barrier for
+    the whole changefeed, min(DDL, sync-point, finish)
+    (cdc/owner/changefeed.go:456-501). Pure: ``control`` is the ordered R +
+    DDL rows (read_control's shape), ``checkpoints`` each target's committed
+    checkpoint_ts. Returns None when nothing is outstanding.
+
+    - stride: ``<= 0`` coalesces every outstanding resolved mark into one
+      epoch (max throughput), k takes the k-th (1 = one epoch per mark).
+    - target_ts: the finish barrier; marks beyond it are never taken, and
+      the cut at target_ts itself only happens when some mark covers it
+      (completeness at target is otherwise unknown).
+    - syncpoint_every: never coalesce past the next sync target (TiCDC's
+      syncPointBarrier, cdc/owner/barrier.go:28-29) — the sync snapshot
+      must land exactly on a resolved mark; the epoch that does is flagged.
+    """
+    chk = min(checkpoints.values())
+    if target_ts is not None and chk >= target_ts:
+        return None
+    resolved = [(r["seq"], r["commit_ts"]) for r in control if r["op"] == OP_RESOLVED]
+    barriers = sorted({ts for _seq, ts in resolved if ts > chk})
+    if target_ts is not None and barriers:
+        covered = barriers[-1] >= target_ts
+        barriers = [b for b in barriers if b < target_ts]
+        if covered:
+            barriers.append(target_ts)
+    if not barriers:
+        return None
+    barrier = barriers[-1] if stride <= 0 else barriers[min(stride, len(barriers)) - 1]
+    is_syncpoint = False
+    if syncpoint_every:
+        next_sp = (chk // syncpoint_every + 1) * syncpoint_every
+        sp_barrier = next((b for b in barriers if b >= next_sp), None)
+        if sp_barrier is not None:
+            barrier = min(barrier, sp_barrier)
+            is_syncpoint = barrier == sp_barrier
+    return EpochPlan(
+        barrier_ts=barrier,
+        barrier_seq=min((seq for seq, ts in resolved if ts >= barrier), default=None),
+        syncpoint=is_syncpoint,
+        ddl_rows=[
+            _ddl_row(r) for r in control
+            if r["op"] == OP_DDL and chk < r["commit_ts"] <= barrier
+        ],
+        targets=tuple(n for n, ts in checkpoints.items() if ts < barrier),
+    )
+
+
+def _promises(states: dict[str, dict | None]) -> list[tuple[int, int]]:
+    return [
+        (st["checkpoint_seq"], st["checkpoint_ts"])
+        for st in states.values()
+        if st is not None and st.get("checkpoint_seq", -1) >= 0
+    ]
+
+
+class EpochDriver:
+    """The one epoch loop behind every front end: lake single-table
+    (ChangefeedEngine), routed multi-table (MultiTableEngine) and MQ publish
+    (MQChangefeed), batch ``run`` and streaming ``advance_to`` alike. A
+    front end supplies each target's committed state (``_states``) and one
+    epoch's apply to one target (``_apply_epoch``); the barrier policy is
+    ``plan_epoch``."""
+
+    log_path: str
+    online_ddl: str | None = None
+    CONTROL_COLS: tuple[str, ...] = ("op", "commit_ts", "seq", "ddl")
+
+    def _states(self) -> dict[str, dict | None]:
+        """Committed state per target (None = not bootstrapped), carrying
+        ``checkpoint_ts`` and ``checkpoint_seq``."""
+        raise NotImplementedError
+
+    def _apply_epoch(self, spark, log: DataFrame, name: str, state: dict,
+                     plan: EpochPlan, ddl_rows: list):
+        """Apply ``plan`` to target ``name``; ``ddl_rows`` are the plan's
+        DDL rows above this target's own checkpoint."""
+        raise NotImplementedError
+
+    def _control_plan(self, control: list) -> list:
+        return control
+
+    def read_log(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.log_path)
+
+    def committed_promises(self) -> list[tuple[int, int]]:
+        """The committed resolved-ts promises ``(checkpoint_seq,
+        checkpoint_ts)``, seq >= 0 only — the marks a front end validating
+        incrementally adds to the ones it discovered."""
+        return _promises(self._states())
+
+    def advance_to(
+        self, spark: SparkSession, barrier_ts: int, barrier_seq: int | None = None
+    ) -> list:
+        """Apply exactly one epoch up to ``barrier_ts`` to every target that
+        has not passed it (no-op when all have; per-target fences make
+        partial progress exact), recording ``barrier_seq`` as its promise
+        (None records none). The streaming tick's unit: it discovers and
+        validates its marks itself (StreamingChangefeed._apply_batch), so
+        nothing is validated here."""
+        out = self._drive(spark, max_epochs=1, mark=(barrier_seq, barrier_ts))
+        return [st for _, st in out]
+
+    def _drive(
+        self,
+        spark: SparkSession,
+        max_epochs: int | None = None,
+        barrier_stride: int = 0,
+        target_ts: int | None = None,
+        validate_resolved: bool = False,
+        syncpoint_every: int | None = None,
+        mark: tuple[int | None, int] | None = None,
+    ) -> list[tuple[str, object]]:
+        """Plan and apply epochs until none is outstanding (or
+        ``max_epochs`` rounds); returns ``(target, stats)`` per apply.
+
+        ONE control-plane read per call: R barriers + DDL rows above the
+        lowest checkpoint (from 0 with online-DDL on: the stash plan needs
+        ghost DDLs that may precede it), sliced in Python per epoch — the
+        owner's barrier bookkeeping and the DDL puller share a read
+        (cdc/owner/ddl_puller.go wiring). ``validate_resolved`` enforces the
+        resolved-ts contract once per call over the discovered marks plus
+        the committed promises (a corrupt tail below a checkpoint is caught
+        even though its R row is below the read's cut), incrementally:
+        events at or below the lowest committed promise seq were validated
+        by the run that committed it, and the seq predicate prunes whole
+        row groups since seq is write-ordered.
+
+        ``mark``: a caller-discovered resolved mark ``(seq, ts)`` that
+        replaces the feed's own — the streaming tick: one epoch to exactly
+        ``ts``, recording ``seq`` as the promise (None records none)."""
+        states = self._states()
+        for name, st in states.items():
+            if st is None:
+                raise FileNotFoundError(f"target {name!r} not bootstrapped")
+        if mark is not None and all(
+            st["checkpoint_ts"] >= mark[1] for st in states.values()
+        ):
+            return []  # every target already covers the tick's barrier
+        low = min(st["checkpoint_ts"] for st in states.values())
+        control = self._control_plan(read_control(
+            spark, self.log_path, 0 if self.online_ddl else low, self.CONTROL_COLS
+        ))
+        log = self.read_log(spark)
+        if validate_resolved:
+            marks = [(r["seq"], r["commit_ts"]) for r in control if r["op"] == OP_RESOLVED]
+            validate_resolved_contract(
+                spark, log, marks + _promises(states),
+                seq_floor=min(st.get("checkpoint_seq", -1) for st in states.values()),
+            )
+        if mark is not None:
+            control = [r for r in control if r["op"] == OP_DDL]
+            control.append(Row(op=OP_RESOLVED, commit_ts=mark[1], seq=mark[0]))
+        out: list[tuple[str, object]] = []
+        rounds, last = 0, None
+        while max_epochs is None or rounds < max_epochs:
+            plan = plan_epoch(
+                control, {n: st["checkpoint_ts"] for n, st in states.items()},
+                barrier_stride, target_ts, syncpoint_every,
+            )
+            if plan is None or plan.barrier_ts == last:
+                break  # drained (or a fenced commit made no progress)
+            for name in plan.targets:
+                chk = states[name]["checkpoint_ts"]
+                ddl_rows = [r for r in plan.ddl_rows if r["commit_ts"] > chk]
+                out.append((name, self._apply_epoch(
+                    spark, log, name, states[name], plan, ddl_rows
+                )))
+            rounds, last = rounds + 1, plan.barrier_ts
+            states = self._states()
+        return out
+
+
+class ChangefeedEngine(EpochDriver):
     """Replays a changefeed log into a LakeTable, epoch by epoch.
 
     ``ignore_txn_start_ts``: drop whole transactions by start_ts before the
@@ -423,11 +622,14 @@ class ChangefeedEngine:
         self.table.create(spark, base, registry, checkpoint_ts=start_ts)
 
     # ------------------------------------------------------------------ run
-    def read_log(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.log_path)
+    def _states(self) -> dict[str, dict | None]:
+        return {self.table.path: self.table.current_manifest()}
 
-    def read_control(self, spark: SparkSession, low_ts: int, cols) -> list:
-        return read_control(spark, self.log_path, low_ts, cols)
+    def _apply_epoch(self, spark, log, name, state, plan, ddl_rows):
+        return self.run_epoch(
+            spark, log, state, plan.barrier_ts, ddl_rows=ddl_rows,
+            barrier_seq=plan.barrier_seq, syncpoint=plan.syncpoint,
+        )
 
     def run(
         self,
@@ -438,7 +640,8 @@ class ChangefeedEngine:
         validate_resolved: bool = True,
         syncpoint_every: int | None = None,
     ) -> RunStats:
-        """Process outstanding barriers. ``barrier_stride=0`` coalesces ALL
+        """Process outstanding barriers (the epoch loop is EpochDriver's,
+        the policy ``plan_epoch``'s). ``barrier_stride=0`` coalesces ALL
         outstanding resolved-ts marks into one epoch (max throughput);
         ``barrier_stride=1`` takes one epoch per resolved-ts mark (max
         granularity / latency); k>1 coalesces k marks per epoch.
@@ -463,75 +666,12 @@ class ChangefeedEngine:
         applying (see ResolvedTsRegression) — one extra column-pruned scan
         per run.
         """
-        stats = RunStats()
-        log = self.read_log(spark)
-        m0 = self.table.current_manifest()
-        if m0 is None:
-            raise FileNotFoundError("target not bootstrapped")
-        # ONE control-plane job per *run*: R barriers + DDL rows above the
-        # starting checkpoint, collected once and sliced in Python per epoch
-        # (both streams are tiny; the owner's barrier bookkeeping and the
-        # DDL puller share a read, cdc/owner/ddl_puller.go wiring)
-        control = self.read_control(
-            spark, m0["checkpoint_ts"], ("op", "commit_ts", "seq", "ddl")
+        out = self._drive(
+            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
+            target_ts=target_ts, validate_resolved=validate_resolved,
+            syncpoint_every=syncpoint_every,
         )
-        resolved = [
-            (r["seq"], r["commit_ts"]) for r in control if r["op"] == OP_RESOLVED
-        ]
-        if validate_resolved:
-            marks = list(resolved)
-            if m0.get("checkpoint_seq", -1) >= 0:
-                marks.append((m0["checkpoint_seq"], m0["checkpoint_ts"]))
-            # incremental: events at or below the committed promise seq were
-            # validated by the run that committed it (appended segments carry
-            # strictly higher seqs by the log contract) — the seq predicate
-            # prunes whole row groups since seq is write-ordered
-            validate_resolved_contract(
-                spark, log, marks, seq_floor=m0.get("checkpoint_seq", -1)
-            )
-        while True:
-            m = self.table.current_manifest()
-            chk = m["checkpoint_ts"]
-            if target_ts is not None and chk >= target_ts:
-                break
-            barriers = sorted({ts for _seq, ts in resolved if ts > chk})
-            if target_ts is not None and barriers:
-                covered = barriers[-1] >= target_ts
-                barriers = [b for b in barriers if b < target_ts]
-                if covered:
-                    barriers.append(target_ts)
-            if not barriers:
-                break
-            barrier = pick_barrier(barriers, barrier_stride)
-            # sync-point clamp: never coalesce past the next sync target —
-            # the sync snapshot must land exactly on a resolved mark
-            is_syncpoint = False
-            if syncpoint_every:
-                next_sp = (chk // syncpoint_every + 1) * syncpoint_every
-                sp_barrier = next((b for b in barriers if b >= next_sp), None)
-                if sp_barrier is not None:
-                    if barrier > sp_barrier:
-                        barrier = sp_barrier
-                    is_syncpoint = barrier == sp_barrier
-            # the earliest resolved-ts promise covering this barrier: events
-            # at or below the barrier all have seq <= this (resume guard)
-            barrier_seq = min(
-                (seq for seq, ts in resolved if ts >= barrier), default=None
-            )
-            ddl_rows = [
-                r for r in control
-                if r["op"] == OP_DDL and chk < r["commit_ts"] <= barrier
-            ]
-            st = self.run_epoch(
-                spark, log, m, barrier, ddl_rows=ddl_rows, barrier_seq=barrier_seq,
-                syncpoint=is_syncpoint,
-            )
-            stats.epochs.append(st)
-            if max_epochs is not None and len(stats.epochs) >= max_epochs:
-                break
-            if barrier == barriers[-1]:
-                break
-        return stats
+        return RunStats([st for _, st in out])
 
     def run_epoch(
         self,
@@ -565,20 +705,22 @@ class ChangefeedEngine:
         Shared by the batch replay loop and the Structured Streaming
         ``foreachBatch`` front-end (micro-batch == epoch).
 
-        ``ddl_rows``: pre-collected DDL events for the slice (rows with
-        op/commit_ts/seq/ddl); None → collected here with an extra job.
+        ``ddl_rows``: pre-collected DDL events for the slice, in the
+        planner's row shape (op/commit_ts/seq/ddl/tbl, see ``EpochPlan``);
+        None → collected here with an extra job.
         """
         epoch = manifest["epoch"] + 1
         registry = SchemaRegistry.from_json(manifest["registry"])
 
         # --- DDL path (driver-side, ordered; S3/K9). The DDL stream is tiny.
         if ddl_rows is None:
-            ddl_rows = (
+            ddl_rows = [
+                _ddl_row(r) for r in
                 sliced.filter(F.col("op") == OP_DDL)
                 .select("commit_ts", "seq", "ddl")
                 .orderBy("commit_ts", "seq")
                 .collect()
-            )
+            ]
         applied_ddls = 0
         truncate_ts = None
         partition_cuts: list[tuple[int, str]] = []
@@ -587,9 +729,7 @@ class ChangefeedEngine:
             if d.get("action") not in REPLICABLE_DDL_ACTIONS:
                 continue  # F2: unreplicable DDL types are skipped, not fatal
             if self.sql_patterns and sql_pattern_skip(
-                d, self.sql_patterns,
-                table=(r["tbl"] if "tbl" in getattr(r, "__fields__", ())
-                       else None) or DEFAULT_TABLE,
+                d, self.sql_patterns, table=r["tbl"] or DEFAULT_TABLE
             ):
                 continue  # DM sql-pattern filter: statement-text skip
             if self.shard_merge:
@@ -761,40 +901,12 @@ class ChangefeedEngine:
             )
         return exp.count()
 
-    def committed_promises(self) -> list[tuple[int, int]]:
-        """The committed resolved-ts promise(s): ``(checkpoint_seq,
-        checkpoint_ts)`` pairs from the manifest(s), seq >= 0 only. Front
-        ends validating incrementally append these to the discovered marks
-        and use the min seq as the validation floor (see run())."""
-        m = self.table.current_manifest()
-        if m is None or m.get("checkpoint_seq", -1) < 0:
-            return []
-        return [(m["checkpoint_seq"], m["checkpoint_ts"])]
-
-    def advance_to(
-        self, spark: SparkSession, barrier_ts: int, barrier_seq: int | None = None
-    ) -> list[EpochStats]:
-        """Apply exactly one epoch up to ``barrier_ts`` (no-op when the
-        checkpoint already covers it) — the unit both front-ends share: the
-        batch loop picks barriers from collected control rows, the streaming
-        tail from the marks each micro-batch discovers."""
-        m = self.table.current_manifest()
-        if m is None:
-            raise FileNotFoundError("target not bootstrapped")
-        if m["checkpoint_ts"] >= barrier_ts:
-            return []
-        log = self.read_log(spark)
-        st = self.run_epoch(
-            spark, log, m, barrier_ts=barrier_ts, barrier_seq=barrier_seq
-        )
-        return [st]
-
     # ---------------------------------------------------------------- reads
     def final_state(self, spark: SparkSession) -> DataFrame:
         return self.table.read(spark)
 
 
-class MultiTableEngine:
+class MultiTableEngine(EpochDriver):
     """Multi-table changefeed: route source tables onto per-target LakeTables.
 
     The reference replicates per table end-to-end — per-table pipelines
@@ -813,11 +925,15 @@ class MultiTableEngine:
     Several source globs may share one target — DM's shard-merge topology
     (keys collide across shards under LWW, the documented merge semantics).
 
-    One Spark-side scan per (table, epoch): each target's slice is the shared
-    log filtered by its routing predicate — predicate + column pruning push
-    to the scan, so a 3-table changefeed costs 3 pruned scans of the same
-    files, not 3 full reads.
+    The epoch loop is EpochDriver's: one barrier per round for the whole
+    changefeed, applied to each table still behind it by a sub-engine built
+    once per target. One Spark-side scan per (table, epoch): each target's
+    slice is the shared log filtered by its routing predicate — predicate +
+    column pruning push to the scan, so a 3-table changefeed costs 3 pruned
+    scans of the same files, not 3 full reads.
     """
+
+    CONTROL_COLS = (*EpochDriver.CONTROL_COLS, "tbl")
 
     def __init__(
         self,
@@ -831,8 +947,6 @@ class MultiTableEngine:
         sql_patterns: list[str] | None = None,
         online_ddl: str | None = None,
     ):
-        from tiflow_spark.model import DEFAULT_TABLE
-
         self.log_path = log_path
         self.tables = dict(tables)
         self.rules = list(rules) if rules is not None else [(n, n) for n in tables]
@@ -845,7 +959,7 @@ class MultiTableEngine:
         # scheme name ('gh-ost' | 'pt-osc') or None. When set, helper-table
         # DML is dropped, ghost-table DDLs stash, and the cut-over
         # rename_table applies the stash to the real table (see
-        # _coordinate_online_ddl).
+        # _control_plan).
         if online_ddl is not None:
             from tiflow_spark.operators.filters import ONLINE_DDL_SCHEMES
 
@@ -857,6 +971,19 @@ class MultiTableEngine:
         unknown = {tgt for _, tgt in self.rules} - set(self.tables)
         if unknown:
             raise ValueError(f"route rules target unknown tables: {sorted(unknown)}")
+        # per-target apply: same filter config as a single-table feed, plus
+        # optimist shard-DDL dedup (DM task mode)
+        self._subs = {
+            name: ChangefeedEngine(
+                log_path, table,
+                ignore_txn_start_ts=self.ignore_txn_start_ts,
+                event_filter=event_filter,
+                validate_rows=validate_rows,
+                sql_patterns=self.sql_patterns,
+                shard_merge=True,
+            )
+            for name, table in self.tables.items()
+        }
 
     # ------------------------------------------------------------- routing
     def route_name(self, src: str | None) -> str | None:
@@ -890,29 +1017,31 @@ class MultiTableEngine:
         return pred
 
     # ---------------------------------------------------------- online DDL
-    def _coordinate_online_ddl(self, control) -> list:
+    def _control_plan(self, control: list) -> list:
         """Online-DDL plugin (D2, dm/syncer/online-ddl-tools/online_ddl.go:
-        46-88,195-260): walk the full control DDL stream in order and return
-        the REPLICATED plan — trash-table DDLs dropped, ghost-table DDLs
-        stashed per real table, and each cut-over ``rename_table``
+        46-88,195-260): walk the full control stream in order and return it
+        with the DDL rows REPLICATED — trash-table DDLs dropped, ghost-table
+        DDLs stashed per real table, and each cut-over ``rename_table``
         (ghost → real) expanded into its ghost's stashed DDLs re-timed to
-        the rename's commit_ts, which is gh-ost's contract: the ALTER takes
-        effect on the real table at the atomic rename. The rename itself is
-        not replicated (the downstream never has the helper tables). A
-        rename consumes its stash, so back-to-back migrations of the same
-        table never double-apply. Pure function of the immutable control
-        stream — a resumed run reconstructs the identical plan, so no stash
-        persistence is needed (DM persists its stash only because it cannot
-        re-read the purged binlog; this log is the durable WAL)."""
+        the rename's commit_ts and tagged with the real table, which is
+        gh-ost's contract: the ALTER takes effect on the real table at the
+        atomic rename. The rename itself is not replicated (the downstream
+        never has the helper tables). A rename consumes its stash, so
+        back-to-back migrations of the same table never double-apply. Pure
+        function of the immutable control stream — a resumed run
+        reconstructs the identical plan, so no stash persistence is needed
+        (DM persists its stash only because it cannot re-read the purged
+        binlog; this log is the durable WAL). R rows pass through."""
+        if not self.online_ddl:
+            return control
         from tiflow_spark.operators.filters import classify_online_ddl
 
         out = []
         stash: dict[str, list] = {}
-        rows = sorted(
-            (r for r in control if r["op"] == OP_DDL),
-            key=lambda r: (r["commit_ts"], r["seq"]),
-        )
-        for r in rows:
+        for r in control:
+            if r["op"] != OP_DDL:
+                out.append(r)
+                continue
             d = json.loads(r["ddl"])
             kind, real = classify_online_ddl(r["tbl"], self.online_ddl)
             if kind == "trash":
@@ -926,19 +1055,15 @@ class MultiTableEngine:
                 )
                 if gkind == "ghost" and greal == (d.get("to") or r["tbl"]):
                     for sd in stash.pop(greal, []):
-                        out.append({
-                            "op": OP_DDL, "commit_ts": r["commit_ts"],
-                            "seq": r["seq"], "ddl": json.dumps(sd),
-                            "tbl": greal,
-                        })
+                        out.append(_ddl_row({
+                            "commit_ts": r["commit_ts"], "seq": r["seq"],
+                            "ddl": json.dumps(sd), "tbl": greal,
+                        }))
                 continue  # bare rename_table: not replicable downstream
             out.append(r)
         return out
 
     # ------------------------------------------------------------ lifecycle
-    def read_log(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.log_path)
-
     def bootstrap(
         self,
         spark: SparkSession,
@@ -958,11 +1083,24 @@ class MultiTableEngine:
 
     def checkpoint_ts(self) -> int:
         """Changefeed checkpoint = min over per-table checkpoints."""
-        return min(
-            self.tables[n].current_manifest()["checkpoint_ts"] for n in self.tables
-        )
+        return min(m["checkpoint_ts"] for m in self._states().values())
 
     # ------------------------------------------------------------------ run
+    def _states(self) -> dict[str, dict | None]:
+        return {name: t.current_manifest() for name, t in self.tables.items()}
+
+    def _apply_epoch(self, spark, log, name, state, plan, ddl_rows):
+        routed = log.filter(self._route_pred(name))
+        if self.online_ddl:
+            from tiflow_spark.operators.filters import online_ddl_dml_filter
+
+            routed = online_ddl_dml_filter(routed, self.online_ddl)
+        return self._subs[name].run_epoch(
+            spark, routed, state, plan.barrier_ts,
+            ddl_rows=[r for r in ddl_rows if self.route_name(r["tbl"]) == name],
+            barrier_seq=plan.barrier_seq, syncpoint=plan.syncpoint,
+        )
+
     def run(
         self,
         spark: SparkSession,
@@ -974,185 +1112,13 @@ class MultiTableEngine:
         per-table RunStats. A table already at/ahead of a barrier (it
         committed before a crash; others did not) skips that barrier — the
         per-table manifest fence makes mixed-progress resume exact."""
-        log = self.read_log(spark)
-        manifests = {}
-        for name, table in self.tables.items():
-            m = table.current_manifest()
-            if m is None:
-                raise FileNotFoundError(f"table {name!r} not bootstrapped")
-            manifests[name] = m
-        chk0 = min(m["checkpoint_ts"] for m in manifests.values())
-        # one control-plane collect per run (sidecar-aware, see read_control);
-        # DDL rows carry their source table for driver-side routing. With
-        # online-DDL on, read from 0: the stash plan needs ghost DDLs that
-        # may precede the checkpoint (the control set is tiny)
-        control = read_control(
-            spark, self.log_path, 0 if self.online_ddl else chk0,
-            ("op", "commit_ts", "seq", "ddl", "tbl"),
-        )
-        ddl_plan = (
-            self._coordinate_online_ddl(control) if self.online_ddl
-            else [r for r in control if r["op"] == OP_DDL]
-        )
-        resolved = [
-            (r["seq"], r["commit_ts"]) for r in control if r["op"] == OP_RESOLVED
-        ]
-        if validate_resolved:
-            marks = list(resolved)
-            for m in manifests.values():
-                if m.get("checkpoint_seq", -1) >= 0:
-                    marks.append((m["checkpoint_seq"], m["checkpoint_ts"]))
-            # incremental floor = min committed promise across tables: every
-            # event at/below it was validated by the run that committed the
-            # laggiest table's checkpoint (mirrors the single-table path) —
-            # without it each run re-scans the whole DML log, O(runs × log)
-            seq_floor = min(
-                (m.get("checkpoint_seq", -1) for m in manifests.values()),
-                default=-1,
-            )
-            validate_resolved_contract(spark, log, marks, seq_floor=seq_floor)
         stats = {name: RunStats() for name in self.tables}
-        rounds = 0
-        while True:
-            chk = min(m["checkpoint_ts"] for m in manifests.values())
-            barriers = sorted(
-                {
-                    r["commit_ts"]
-                    for r in control
-                    if r["op"] == OP_RESOLVED and r["commit_ts"] > chk
-                }
-            )
-            if not barriers:
-                break
-            barrier = pick_barrier(barriers, barrier_stride)
-            barrier_seq = min(
-                (seq for seq, ts in resolved if ts >= barrier), default=None
-            )
-            for name, table in self.tables.items():
-                m = manifests[name]
-                if m["checkpoint_ts"] >= barrier:
-                    continue  # this table already passed the barrier (resume)
-                routed = log.filter(self._route_pred(name))
-                if self.online_ddl:
-                    from tiflow_spark.operators.filters import (
-                        online_ddl_dml_filter,
-                    )
-
-                    routed = online_ddl_dml_filter(routed, self.online_ddl)
-                sliced = watermark_cut(
-                    routed,
-                    low_ts=m["checkpoint_ts"],
-                    high_ts=barrier,
-                )
-                ddl_rows = [
-                    r
-                    for r in ddl_plan
-                    if m["checkpoint_ts"] < r["commit_ts"] <= barrier
-                    and self.route_name(r["tbl"]) == name
-                ]
-                sub = ChangefeedEngine(
-                    self.log_path, table,
-                    ignore_txn_start_ts=self.ignore_txn_start_ts,
-                    event_filter=self.event_filter,
-                    validate_rows=self.validate_rows,
-                    sql_patterns=self.sql_patterns,
-                    shard_merge=True,
-                )
-                st = sub.apply_slice(
-                    spark, sliced, m, barrier, ddl_rows=ddl_rows,
-                    barrier_seq=barrier_seq,
-                )
-                stats[name].epochs.append(st)
-                manifests[name] = table.current_manifest()
-            rounds += 1
-            if max_epochs is not None and rounds >= max_epochs:
-                break
-            if barrier == barriers[-1]:
-                break
+        for name, st in self._drive(
+            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
+            validate_resolved=validate_resolved,
+        ):
+            stats[name].epochs.append(st)
         return stats
-
-    def committed_promises(self) -> list[tuple[int, int]]:
-        """Per-table committed promises (seq >= 0 only) — the multi-table
-        twin of ChangefeedEngine.committed_promises; mirrors run()'s marks."""
-        out = []
-        for table in self.tables.values():
-            m = table.current_manifest()
-            if m is not None and m.get("checkpoint_seq", -1) >= 0:
-                out.append((m["checkpoint_seq"], m["checkpoint_ts"]))
-        return out
-
-    def advance_to(
-        self, spark: SparkSession, barrier_ts: int, barrier_seq: int | None = None
-    ) -> list[EpochStats]:
-        """One epoch up to ``barrier_ts`` for every target table that has
-        not passed it yet (per-table fences make partial progress exact) —
-        the streaming front-end's per-tick unit."""
-        log = self.read_log(spark)
-        manifests: dict[str, dict] = {}
-        for name, table in self.tables.items():
-            m = table.current_manifest()
-            if m is None:
-                raise FileNotFoundError(f"table {name!r} not bootstrapped")
-            manifests[name] = m
-        behind = {n for n, m in manifests.items() if m["checkpoint_ts"] < barrier_ts}
-        if not behind:
-            return []
-        # ONE control read per tick (sidecar-aware), routed driver-side —
-        # ddl_rows=None per table would instead run a collect job on each
-        # routed slice, one extra Spark job per table per tick
-        control = read_control(
-            spark,
-            self.log_path,
-            0 if self.online_ddl
-            else min(manifests[n]["checkpoint_ts"] for n in behind),
-            ("op", "commit_ts", "seq", "ddl", "tbl"),
-        )
-        ddl_plan = (
-            self._coordinate_online_ddl(control) if self.online_ddl
-            else [r for r in control if r["op"] == OP_DDL]
-        )
-        out: list[EpochStats] = []
-        for name, table in self.tables.items():
-            if name not in behind:
-                continue
-            m = manifests[name]
-            routed = log.filter(self._route_pred(name))
-            if self.online_ddl:
-                from tiflow_spark.operators.filters import (
-                    online_ddl_dml_filter,
-                )
-
-                routed = online_ddl_dml_filter(routed, self.online_ddl)
-            sliced = watermark_cut(
-                routed,
-                low_ts=m["checkpoint_ts"],
-                high_ts=barrier_ts,
-            )
-            ddl_rows = [
-                r
-                for r in ddl_plan
-                if m["checkpoint_ts"] < r["commit_ts"] <= barrier_ts
-                and self.route_name(r["tbl"]) == name
-            ]
-            # same filter config as the batch path — without it the
-            # streaming front-end would silently apply events the batch
-            # run drops (front-ends must stay byte-identical)
-            sub = ChangefeedEngine(
-                self.log_path, table,
-                ignore_txn_start_ts=self.ignore_txn_start_ts,
-                event_filter=self.event_filter,
-                validate_rows=self.validate_rows,
-                sql_patterns=self.sql_patterns,
-                shard_merge=True,
-            )
-            out.append(
-                sub.apply_slice(
-                    spark, sliced, m, barrier_ts,
-                    ddl_rows=ddl_rows,
-                    barrier_seq=barrier_seq,
-                )
-            )
-        return out
 
     def final_state(self, spark: SparkSession, name: str) -> DataFrame:
         return self.tables[name].read(spark)

@@ -836,67 +836,53 @@ class LakeTable:
                 existing = existing.filter(
                     ~F.coalesce(F.expr(delete_where), F.lit(False))
                 )
-            strategy = os.environ.get("TIFLOW_MERGE_STRATEGY", "agg")
-            if strategy == "join":
-                # anti-join form: exchange snapshot by key + SMJ/SHJ, then
-                # _write_data re-exchanges the union by (bucket, salt)
-                survivors = existing.join(
-                    changes.select(*self.key_cols),
-                    on=self.key_cols,
-                    how="left_anti",
-                ).withColumn(
+            # Single-exchange MERGE: bucket and salt are pure functions of
+            # the key, so ONE repartition on (bucket, salt) co-locates
+            # every key's rows AND is exactly the clustering the snapshot
+            # write needs. The LWW pick then runs in place — grouping on
+            # (bucket, salt, *keys) is satisfied by the subset partitioning
+            # (rows equal on all grouping keys are equal on bucket/salt) —
+            # so snapshot + changes cross one exchange, where an anti-join
+            # (an exchange of the snapshot by key) followed by the write
+            # repartition (a second full exchange of the union) needs two.
+            # ≤ 2 rows per key (changes is one-row-per-key by contract, the
+            # snapshot holds one row per key), and the epoch's row always
+            # wins via max_by on the priority flag; 'D' winners erase the
+            # key.
+            ch = changes.select(
+                *self.key_cols, "op", *payload_names, BUCKET_COL
+            ).withColumn("_prio", F.lit(1))
+            ex = (
+                existing.select(*self.key_cols, *payload_names)
+                .withColumn("op", F.lit("E"))
+                .withColumn(
                     BUCKET_COL, bucket_expr(self.key_cols, self.num_buckets)
                 )
-                new_data = survivors.unionByName(upserts)
-                new_files = self._write_data(new_data, cur_version)
-            else:
-                # Single-exchange MERGE (default): bucket and salt are pure
-                # functions of the key, so ONE repartition on (bucket, salt)
-                # co-locates every key's rows AND is exactly the clustering
-                # the snapshot write needs. The LWW pick then runs in place —
-                # grouping on (bucket, salt, *keys) is satisfied by the
-                # subset partitioning (rows equal on all grouping keys are
-                # equal on bucket/salt) — replacing the former anti-join (one
-                # exchange of the snapshot by key) + write repartition (a
-                # second full exchange of the union) with a single exchange
-                # of snapshot + changes. ≤ 2 rows per key (changes is
-                # one-row-per-key by contract, the snapshot holds one row per
-                # key), and the epoch's row always wins via max_by on the
-                # priority flag; 'D' winners erase the key.
-                ch = changes.select(
-                    *self.key_cols, "op", *payload_names, BUCKET_COL
-                ).withColumn("_prio", F.lit(1))
-                ex = (
-                    existing.select(*self.key_cols, *payload_names)
-                    .withColumn("op", F.lit("E"))
-                    .withColumn(
-                        BUCKET_COL, bucket_expr(self.key_cols, self.num_buckets)
-                    )
-                    .withColumn("_prio", F.lit(0))
+                .withColumn("_prio", F.lit(0))
+            )
+            unioned = ex.unionByName(ch)
+            n_tasks, salt = self._write_partitioning(unioned)
+            winner = (
+                unioned.withColumn("_salt", salt)
+                .repartition(n_tasks, F.col(BUCKET_COL), F.col("_salt"))
+                .groupBy(BUCKET_COL, "_salt", *self.key_cols)
+                .agg(
+                    F.max_by(
+                        F.struct("op", *payload_names), F.col("_prio")
+                    ).alias("_w")
                 )
-                unioned = ex.unionByName(ch)
-                n_tasks, salt = self._write_partitioning(unioned)
-                winner = (
-                    unioned.withColumn("_salt", salt)
-                    .repartition(n_tasks, F.col(BUCKET_COL), F.col("_salt"))
-                    .groupBy(BUCKET_COL, "_salt", *self.key_cols)
-                    .agg(
-                        F.max_by(
-                            F.struct("op", *payload_names), F.col("_prio")
-                        ).alias("_w")
-                    )
+            )
+            new_data = (
+                winner.filter(F.col("_w.op") != "D")
+                .select(
+                    *self.key_cols,
+                    *[F.col(f"_w.{c}").alias(c) for c in payload_names],
+                    BUCKET_COL,
                 )
-                new_data = (
-                    winner.filter(F.col("_w.op") != "D")
-                    .select(
-                        *self.key_cols,
-                        *[F.col(f"_w.{c}").alias(c) for c in payload_names],
-                        BUCKET_COL,
-                    )
-                )
-                new_files = self._write_data(
-                    new_data, cur_version, pre_partitioned=True
-                )
+            )
+            new_files = self._write_data(
+                new_data, cur_version, pre_partitioned=True
+            )
         else:
             new_files = self._write_data(upserts, cur_version)
 

@@ -130,7 +130,7 @@ def sequential_apply(
     events.sort(key=_event_sort_key)
 
     if online_ddl:
-        # online-DDL plugin twin (engine._coordinate_online_ddl +
+        # online-DDL plugin twin (engine.MultiTableEngine._control_plan +
         # online_ddl_dml_filter): drop helper-table DML, stash ghost DDLs,
         # splice each stash into the stream at its cut-over rename — then
         # the normal replay path below applies the transformed stream

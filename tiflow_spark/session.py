@@ -17,7 +17,7 @@ def get_spark(
 
     - shuffle partitions sized to cores (not the 200 default) for local runs;
     - AQE on: runtime partition coalescing + skew-join splitting (the
-      engine's MERGE anti-join benefits under hot-key skew);
+      row validator's key join benefits under hot-key skew);
     - UTC session TZ so results compare bit-exact against the DuckDB oracle;
     - Arrow enabled for the pandas-UDF paths.
     """

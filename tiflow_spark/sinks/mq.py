@@ -38,8 +38,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tiflow_spark.engine import EpochDriver
 from tiflow_spark.functions.hashing import md5_bucket
-from tiflow_spark.model import event_order_cols
+from tiflow_spark.model import DML_OPS, event_order_cols
+from tiflow_spark.operators.filters import engine_event_filters
+from tiflow_spark.operators.watermark import watermark_cut
+from tiflow_spark.registry import SchemaRegistry
 
 
 # topic-manifest keys that persist across epochs even when a later epoch's
@@ -718,7 +722,7 @@ MQ_PROTOCOLS = {
 }
 
 
-class MQChangefeed:
+class MQChangefeed(EpochDriver):
     """The reference's MQ (Kafka) changefeed flow (cdc/sink/mq.go:55-220):
     tail the changefeed log and PUBLISH every DML event — no LWW fold; the
     consumer sees the full ordered change stream, unlike the lake MERGE
@@ -731,10 +735,12 @@ class MQChangefeed:
     path: re-running a published epoch is a no-op, and a crashed attempt's
     orphan segment is overwritten on replay.
 
-    Scale shape per epoch: one ts-pruned scan of the log slice, one
-    exchange on the partition id, a per-partition offset window, one
-    partitioned write. DDL and checkpoint messages are driver-side rows
-    (control plane is tiny by construction).
+    The epoch loop and barrier policy are the lake path's (EpochDriver,
+    plan_epoch); this class supplies the per-epoch publish. Scale shape per
+    epoch: one ts-pruned scan of the log slice, one exchange on the
+    partition id, a per-partition offset window, one partitioned write. DDL
+    and checkpoint messages are driver-side rows (control plane is tiny by
+    construction).
     """
 
     def __init__(
@@ -760,28 +766,76 @@ class MQChangefeed:
         self.ignore_txn_start_ts = list(ignore_txn_start_ts or [])
         self.event_filter = event_filter
 
-    def read_log(self, spark: SparkSession) -> DataFrame:
-        from tiflow_spark.model import CHANGE_EVENT_SCHEMA
-
-        return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.log_path)
-
-    def committed_promises(self) -> list[tuple[int, int]]:
-        """The topic's committed resolved-ts promise: ``(checkpoint_seq,
-        barrier_ts)`` from the manifest — the MQ twin of
-        ChangefeedEngine.committed_promises, so the streaming front-end
-        validates both sink kinds identically."""
+    def _states(self) -> dict[str, dict]:
         st = self.sink.topic_state()
-        seq = int(st.get("checkpoint_seq", -1))
-        return [(seq, int(st.get("barrier_ts", 0)))] if seq >= 0 else []
+        return {self.sink.path: {
+            **st, "checkpoint_ts": int(st.get("barrier_ts", 0)),
+            "checkpoint_seq": int(st.get("checkpoint_seq", -1)),
+        }}
 
-    def advance_to(
-        self, spark: SparkSession, barrier_ts: int, barrier_seq: int | None = None
-    ) -> list[dict]:
-        """Publish every outstanding barrier up to ``barrier_ts`` — the
-        per-tick unit the streaming front-end drives (StreamingChangefeed
-        validates the tick's marks first, so validation is skipped here,
-        mirroring ChangefeedEngine.advance_to)."""
-        return self.run(spark, validate_resolved=False, up_to_ts=barrier_ts)
+    def _apply_epoch(self, spark, log, name, state, plan, ddl_rows) -> dict:
+        """Publish one epoch: the slice's DML, filtered and codec-enveloped,
+        then its DDLs and the checkpoint as broadcast messages."""
+        dml = watermark_cut(
+            log, low_ts=state["checkpoint_ts"], high_ts=plan.barrier_ts
+        ).filter(F.col("op").isin(*DML_OPS))
+        dml = engine_event_filters(
+            dml, self.ignore_txn_start_ts, self.event_filter
+        )
+        ddl_rows = [(r["commit_ts"], r["ddl"]) for r in ddl_rows]
+        extra_state = None
+        if self.protocol == "avro" and self.envelope is None:
+            # schema-registry-versioned avro: the topic manifest is the
+            # registry store (schema_registry.go), restored exactly as of
+            # the published checkpoint (the DM table_info-per-checkpoint
+            # rule, dm/syncer/checkpoint.go:971-981). Apply this epoch's
+            # DDLs in commit order, register the new versions' writer
+            # schemas, and encode every event under ITS resolved version's
+            # schema id
+            registry = (
+                SchemaRegistry.from_json(state["registry_json"])
+                if state.get("registry_json")
+                else SchemaRegistry.initial()
+            )
+            for cts, ddl in ddl_rows:
+                registry.apply_ddl(json.loads(ddl), cts)
+            avro_ids = dict(state.get("avro_ids") or {})
+            avro_schemas = dict(state.get("avro_schemas") or {})
+            register_avro_schemas(registry, avro_ids, avro_schemas)
+            envelope = avro_envelope_versioned(registry, avro_ids)
+            extra_state = {
+                "registry_json": registry.to_json(),
+                "avro_ids": avro_ids,
+                "avro_schemas": avro_schemas,
+            }
+        else:
+            envelope = (
+                self.envelope if self.envelope is not None
+                else MQ_PROTOCOLS[self.protocol]()
+            )
+        # a codec is either a Column (single envelope expression) or a
+        # DataFrame transformer (staged construction for deep wire
+        # formats whose one-expression form blows up the plan)
+        events = (
+            envelope(dml) if callable(envelope) and not isinstance(envelope, Column)
+            else dml.withColumn("envelope", envelope)
+        )
+        epoch = state["epoch"] + 1
+        published = self.sink.write_epoch(
+            events, epoch=epoch, barrier_ts=plan.barrier_ts, ddl_rows=ddl_rows,
+            protocol=None if self.envelope is not None else self.protocol,
+            # persisted as the topic's checkpoint_seq: the next run's
+            # validation floor
+            barrier_seq=plan.barrier_seq, extra_state=extra_state,
+        )
+        n = sum(
+            v - state["offsets"][p]
+            for p, v in self.sink.topic_state()["offsets"].items()
+        ) if published else 0
+        return {
+            "epoch": epoch, "barrier_ts": plan.barrier_ts,
+            "published": published, "messages": n,
+        }
 
     def run(
         self,
@@ -789,133 +843,20 @@ class MQChangefeed:
         max_epochs: int | None = None,
         barrier_stride: int = 0,
         validate_resolved: bool = True,
-        up_to_ts: int | None = None,
+        target_ts: int | None = None,
     ) -> list[dict]:
-        """Publish all outstanding barriers (at most up to ``up_to_ts`` when
-        given); returns one stats dict per published epoch. Same stride
-        semantics as ChangefeedEngine.run; ``validate_resolved`` enforces
-        the resolved-ts contract over the unpublished tail exactly like the
-        lake path (a feed that promises completeness and then violates it
-        is refused, not published)."""
-        from tiflow_spark.engine import (
-            pick_barrier,
-            read_control,
-            validate_resolved_contract,
+        """Publish all outstanding barriers (at most up to ``target_ts``,
+        the finish barrier of ChangefeedEngine.run, when given); returns one
+        stats dict per published epoch. Same epoch loop and stride semantics
+        as the lake path (EpochDriver); ``validate_resolved`` enforces the
+        resolved-ts contract over the unpublished tail exactly like the lake
+        path (a feed that promises completeness and then violates it is
+        refused, not published)."""
+        out = self._drive(
+            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
+            target_ts=target_ts, validate_resolved=validate_resolved,
         )
-        from tiflow_spark.model import DML_OPS, OP_DDL, OP_RESOLVED
-        from tiflow_spark.operators.filters import engine_event_filters
-        from tiflow_spark.operators.watermark import watermark_cut
-
-        state = self.sink.topic_state()
-        chk = int(state.get("barrier_ts", 0))
-        control = read_control(
-            spark, self.log_path, chk, ("op", "commit_ts", "seq", "ddl")
-        )
-        # schema-registry-versioned avro: the topic manifest is the registry
-        # store (schema_registry.go). Resume restores the registry exactly as
-        # of the published checkpoint (the DM table_info-per-checkpoint rule,
-        # dm/syncer/checkpoint.go:971-981); DDLs above it register new writer
-        # schemas as their epochs publish.
-        versioned_avro = self.protocol == "avro" and self.envelope is None
-        registry = avro_ids = avro_schemas = None
-        if versioned_avro:
-            from tiflow_spark.registry import SchemaRegistry
-
-            registry = (
-                SchemaRegistry.from_json(state["registry_json"])
-                if state.get("registry_json")
-                else SchemaRegistry.initial()
-            )
-            avro_ids = dict(state.get("avro_ids") or {})
-            avro_schemas = dict(state.get("avro_schemas") or {})
-            register_avro_schemas(registry, avro_ids, avro_schemas)
-        resolved = [
-            (r["seq"], r["commit_ts"]) for r in control if r["op"] == OP_RESOLVED
-        ]
-        log = self.read_log(spark)
-        if validate_resolved:
-            marks = list(resolved)
-            # the committed promise from the topic manifest: detects a
-            # corrupt tail below the published barrier even though its R row
-            # is now below the control read's low_ts cut (engine.run twin)
-            chk_seq = int(state.get("checkpoint_seq", -1))
-            if chk_seq >= 0:
-                marks.append((chk_seq, chk))
-            # incremental: events at/below the committed promise seq were
-            # validated by the run that published it — without the floor
-            # every publish run re-scans the ENTIRE DML log, O(runs × log)
-            validate_resolved_contract(spark, log, marks, seq_floor=chk_seq)
-        out: list[dict] = []
-        while True:
-            barriers = sorted(
-                {r["commit_ts"] for r in control
-                 if r["op"] == OP_RESOLVED and r["commit_ts"] > chk
-                 and (up_to_ts is None or r["commit_ts"] <= up_to_ts)}
-            )
-            if not barriers:
-                break
-            barrier = pick_barrier(barriers, barrier_stride)
-            sliced = watermark_cut(log, low_ts=chk, high_ts=barrier)
-            dml = sliced.filter(F.col("op").isin(*DML_OPS))
-            dml = engine_event_filters(
-                dml, self.ignore_txn_start_ts, self.event_filter
-            )
-            ddl_rows = [
-                (r["commit_ts"], r["ddl"]) for r in control
-                if r["op"] == OP_DDL and chk < r["commit_ts"] <= barrier
-            ]
-            extra_state = None
-            if versioned_avro:
-                # apply this epoch's DDLs in commit order, register the new
-                # versions' writer schemas, and encode every event under ITS
-                # resolved version's schema id
-                for cts, ddl in sorted(ddl_rows):
-                    registry.apply_ddl(json.loads(ddl), cts)
-                register_avro_schemas(registry, avro_ids, avro_schemas)
-                envelope = avro_envelope_versioned(registry, avro_ids)
-                extra_state = {
-                    "registry_json": registry.to_json(),
-                    "avro_ids": avro_ids,
-                    "avro_schemas": avro_schemas,
-                }
-            else:
-                envelope = (
-                    self.envelope if self.envelope is not None
-                    else MQ_PROTOCOLS[self.protocol]()
-                )
-            # a codec is either a Column (single envelope expression) or a
-            # DataFrame transformer (staged construction for deep wire
-            # formats whose one-expression form blows up the plan)
-            events = (
-                envelope(dml) if callable(envelope) and not isinstance(envelope, Column)
-                else dml.withColumn("envelope", envelope)
-            )
-            epoch = self.sink.topic_state()["epoch"] + 1
-            # the earliest resolved promise covering this barrier — persisted
-            # as the topic's checkpoint_seq (next run's validation floor)
-            barrier_seq = min(
-                (seq for seq, ts in resolved if ts >= barrier), default=None
-            )
-            published = self.sink.write_epoch(
-                events, epoch=epoch, barrier_ts=barrier, ddl_rows=ddl_rows,
-                protocol=None if self.envelope is not None else self.protocol,
-                barrier_seq=barrier_seq, extra_state=extra_state,
-            )
-            n = sum(
-                v - state["offsets"][p]
-                for p, v in self.sink.topic_state()["offsets"].items()
-            ) if published else 0
-            out.append({
-                "epoch": epoch, "barrier_ts": barrier,
-                "published": published, "messages": n,
-            })
-            state = self.sink.topic_state()
-            chk = barrier
-            if max_epochs is not None and len(out) >= max_epochs:
-                break
-            if barrier == barriers[-1]:
-                break
-        return out
+        return [st for _, st in out]
 
 
 def _decode_open_json(row_msgs: DataFrame) -> DataFrame:

@@ -38,15 +38,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiflow_spark.engine import ChangefeedEngine, EpochStats, MultiTableEngine
+from tiflow_spark.engine import EpochDriver, EpochStats
 from tiflow_spark.model import CHANGE_EVENT_SCHEMA, OP_RESOLVED
 
 
 class StreamingChangefeed:
     """Continuous tail of a changefeed log directory into one LakeTable
-    (``ChangefeedEngine``) or a routed set of them (``MultiTableEngine``)."""
+    (``ChangefeedEngine``), a routed set of them (``MultiTableEngine``) or
+    an MQ topic (``MQChangefeed``)."""
 
-    def __init__(self, engine: "ChangefeedEngine | MultiTableEngine",
+    def __init__(self, engine: "EpochDriver",
                  checkpoint_dir: str,
                  max_files_per_trigger: int | None = None,
                  validate_resolved: bool = True):
@@ -59,10 +60,11 @@ class StreamingChangefeed:
     # ------------------------------------------------------------- internals
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         """One tick: take the newest resolved mark this batch discovered as
-        the barrier and advance the engine to it. Works for BOTH engine
-        kinds — ``ChangefeedEngine`` (one epoch) and ``MultiTableEngine``
-        (one epoch per behind table) — through the shared ``advance_to``;
-        already-covered barriers no-op via the manifest checkpoint."""
+        the barrier and advance the engine to it. Works for every front end
+        — ``ChangefeedEngine``, ``MultiTableEngine`` (one epoch per behind
+        table) and ``MQChangefeed`` — through the shared
+        ``EpochDriver.advance_to``; already-covered barriers no-op via the
+        committed checkpoint."""
         from tiflow_spark.engine import validate_resolved_contract
 
         spark = batch.sparkSession
