@@ -130,3 +130,30 @@ def assert_tables_equal(actual: pd.DataFrame, expected: pd.DataFrame):
     assert list(a.columns) == list(e.columns), f"{list(a.columns)} != {list(e.columns)}"
     assert len(a) == len(e), f"row count {len(a)} != {len(e)}"
     pd.testing.assert_frame_equal(a, e, check_dtype=False)
+
+
+# an integral, a string and a timestamp payload field: one field per kind of
+# value the versioned Avro wire carries (long / string / raw JSON lexeme)
+AVRO_FIELDS = [(1, "n", "bigint", None), (2, "s", "string", None),
+               (3, "at", "timestamp", None)]
+
+
+def avro_roundtrip(df, fields=AVRO_FIELDS):
+    """Encode change-event rows with ``avro_envelope_versioned`` under a
+    one-version registry of ``fields`` and decode the messages back with
+    the relay's ``_decode_avro``: ``(input Row + envelope, decoded Row)``
+    pairs."""
+    from tiflow_spark.registry import SchemaRegistry
+    from tiflow_spark.sinks.mq import (
+        _decode_avro, avro_envelope_versioned, register_avro_schemas,
+    )
+
+    registry = SchemaRegistry.initial(fields)
+    ids: dict = {}
+    schemas: dict = {}
+    register_avro_schemas(registry, ids, schemas)
+    rows = avro_envelope_versioned(registry, ids)(df).collect()
+    msgs = df.sparkSession.createDataFrame(
+        [(r["envelope"],) for r in rows], "value string")
+    state = {"avro_ids": ids, "avro_schemas": schemas}
+    return list(zip(rows, _decode_avro(msgs, state).collect()))

@@ -316,37 +316,49 @@ def test_mq_publish_validation_floor_and_restart_detection(tmp_path, spark, monk
 
 
 def test_avro_wire_roundtrip_bytes(feed, spark):
-    """Every field of every DML event survives JVM-expression encode →
-    Python varint decode byte-exactly, including the null branches of the
-    optional fields; and the wire header is real Confluent framing."""
+    """Every field of every DML event survives the versioned Avro wire
+    (JVM-expression encode → relay decode), including the null branches of
+    the optional fields, under a registry with an integral (``n``, spliced
+    into each row image as -seq), a string (``text``) and a timestamp
+    (``ts``) field; and the wire header is real Confluent framing."""
     from tiflow_spark.model import CHANGE_EVENT_SCHEMA
-    from tiflow_spark.sinks.mq import (
-        AVRO_ROW_SCHEMA_ID, _avro_parse_row, avro_envelope,
-    )
+    from tiflow_spark.sinks.mq import _decode_avro
+    from tests.helpers import avro_roundtrip
+
+    def with_n(c):
+        return F.when(F.col(c).isNotNull(), F.concat(
+            F.expr(f"substring({c}, 1, length({c}) - 1)"),
+            F.lit(',"n":'), (-F.col("seq")).cast("string"), F.lit("}")))
 
     log = spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(feed.log_path)
-    dml = log.filter(F.col("op").isin("I", "U", "D"))
-    rows = dml.withColumn("wire", avro_envelope()).collect()
-    assert rows
-    saw_null_start, saw_pre = False, False
-    for r in rows:
-        wire = r["wire"]
-        assert wire.startswith("00" + f"{AVRO_ROW_SCHEMA_ID:08x}")
-        (seq, op, commit_ts, start_ts, schema_version, conv_id, turn_idx,
-         payload, pre_payload, ddl, hint, tbl) = _avro_parse_row(wire)
-        assert (seq, op, commit_ts) == (r["seq"], r["op"], r["commit_ts"])
-        assert start_ts == r["start_ts"]
-        assert schema_version == r["schema_version"]
-        assert (conv_id, turn_idx) == (r["conv_id"], r["turn_idx"])
-        assert payload == r["payload"]
-        assert pre_payload == r["pre_payload"]
-        assert tbl == r["tbl"]
-        saw_null_start = saw_null_start or start_ts is None
-        saw_pre = saw_pre or pre_payload is not None
+    dml = log.filter(F.col("op").isin("I", "U", "D")).withColumn(
+        "payload", with_n("payload")).withColumn(
+        "pre_payload", with_n("pre_payload"))
+    fields = [(1, "n", "bigint", None), (2, "text", "string", None),
+              (3, "ts", "timestamp", None)]
+
+    def image(text):
+        row = json.loads(text or "null")
+        return row and {name: row.get(name) for _, name, _, _ in fields}
+
+    pairs = avro_roundtrip(dml, fields)
+    assert pairs
+    saw_pre = False
+    for r, got in pairs:
+        assert r["envelope"].startswith("00" + f"{1:08x}")  # magic, schema id
+        assert (got.seq, got.op, got.commit_ts, got.start_ts) == (
+            r["seq"], r["op"], r["commit_ts"], r["start_ts"])
+        assert got.schema_version == 1  # the id's one registry version
+        assert (got.conv_id, got.turn_idx, got.tbl) == (
+            r["conv_id"], r["turn_idx"], r["tbl"])
+        assert image(got.payload) == image(r["payload"])
+        assert image(got.pre_payload) == image(r["pre_payload"])
+        saw_pre = saw_pre or got.pre_payload is not None
     assert saw_pre  # updates carry a pre-image on this feed
 
-    with pytest.raises(ValueError, match="bad magic"):
-        _avro_parse_row("01" + "00000001" + "00")
+    bad = spark.createDataFrame([("01" + "00000001" + "00",)], "value string")
+    with pytest.raises(Exception, match="bad magic"):
+        _decode_avro(bad, {}).collect()
 
 
 def test_avro_schema_registry_versioning(tmp_path, spark):
@@ -453,6 +465,35 @@ def test_avro_registry_dedupes_identical_schemas():
     assert x == {"name": "x", "type": ["null", "long"], "sparkType": "int"}
 
 
+def test_avro_relay_refuses_unregistered_schema_id(tmp_path, spark):
+    """A row message whose schema id the topic manifest does not register —
+    the shape a pre-registry topic's messages have — is refused, not
+    decoded under some other writer schema: ``topic_to_log`` raises a
+    ValueError naming the id and leaves no half-built log. The message is
+    a real id-1 message re-headed as id 7, so any fallback to a registered
+    schema would decode it cleanly."""
+    from tiflow_spark.sinks.mq import FileMQSink, MQChangefeed, topic_to_log
+    from tests.helpers import ev, pl, write_feed
+
+    _, log_dir = write_feed(
+        tmp_path, [ev(0, "I", 100, "c1", 0, pl("a")), ev(1, "R", 150)], [],
+        final_resolved=False)
+    sink = FileMQSink(str(tmp_path / "topic"), n_partitions=1)
+    MQChangefeed(log_dir, sink, protocol="avro").run(spark)
+    assert sink.topic_state()["avro_ids"] == {"1": 1}
+    msg = sink.read_topic(spark).filter(F.col("kind") == "row").first()
+    seg = tmp_path / "topic" / "epoch=000001" / "partition=0"
+    (seg / "part-unregistered.json").write_text(json.dumps({
+        "offset": 99, "kind": "row",
+        "value": msg["value"][:2] + f"{7:08x}" + msg["value"][10:],
+    }) + "\n")
+
+    out = tmp_path / "relay_log"
+    with pytest.raises(ValueError, match="avro schema id 7 "):
+        topic_to_log(spark, sink, str(out))
+    assert not out.exists()
+
+
 def test_canal_pb_wire_roundtrip_bytes(feed, spark):
     """Canal protobuf wire: JVM staged encode → Python TLV decode recovers
     header fields, before/after column images, and null-column omission;
@@ -538,9 +579,8 @@ def test_binary_wire_roundtrip_edge_strings(spark):
     UTF-8 survive both binary wires byte-exactly — string lengths are OCTET
     lengths on the wire (a char-length encode would corrupt multi-byte
     payloads)."""
-    from tiflow_spark.sinks.mq import (
-        _avro_parse_row, _canal_pb_parse_row, avro_envelope, canal_pb_envelope,
-    )
+    from tiflow_spark.sinks.mq import _canal_pb_parse_row, canal_pb_envelope
+    from tests.helpers import avro_roundtrip
 
     payloads = ['{"text": "héllo wörld 你好 🚀"}', "", '{"q": "\\"quoted\\""}',
                 '{"nl": "a\\nb"}', "日本語テキスト"]
@@ -554,9 +594,12 @@ def test_binary_wire_roundtrip_edge_strings(spark):
         "schema_version int, conv_id string, turn_idx int, payload string, "
         "pre_payload string, ddl string, partition_hint int, tbl string",
     )
-    for r in df.withColumn("w", avro_envelope()).collect():
-        parsed = _avro_parse_row(r["w"])
-        assert parsed[5] == r["conv_id"] and parsed[7] == r["payload"]
+    # on the versioned Avro wire the same strings ride in a string field
+    rows_s = df.withColumn(
+        "payload", F.to_json(F.struct(F.col("payload").alias("s"))))
+    for r, got in avro_roundtrip(rows_s):
+        assert got.conv_id == r["conv_id"]
+        assert json.loads(got.payload)["s"] == payloads[r["seq"]]
     for r in canal_pb_envelope()(df).collect():
         parsed = _canal_pb_parse_row(r["envelope"])
         assert parsed[5] == r["conv_id"] and parsed[7] == r["payload"]

@@ -155,17 +155,22 @@ def test_sql_pattern_filter_library(spark):
                             "query": "ALTER TABLE t DROP COLUMN x /*raw*/"}),
          None),
         ("U", None, None),
+        # partial DDL: no column name
+        ("DDL", json.dumps({"action": "add_column", "type": "string"}), None),
     ]
     df = spark.createDataFrame(rows, "op string, ddl string, tbl string")
 
     got = sql_pattern_filter(df, ["add column SECRET"]).collect()
-    assert len(got) == 4  # only the secret add_column dropped (case-insens.)
+    assert len(got) == 5  # only the secret add_column dropped (case-insens.)
     got = sql_pattern_filter(df, ["^TRUNCATE TABLE audit$"]).collect()
-    assert len(got) == 4  # tbl column feeds the rendered statement
+    assert len(got) == 5  # tbl column feeds the rendered statement
     got = sql_pattern_filter(df, [r"/\*raw\*/"]).collect()
-    assert len(got) == 4  # the dict's own query field matches
+    assert len(got) == 5  # the dict's own query field matches
     got = sql_pattern_filter(df, ["nomatch"]).collect()
-    assert len(got) == 5  # DML row always kept, NULL-evaluating rows kept
+    assert len(got) == 6  # DML row always kept, NULL-evaluating rows kept
+    # a missing part is skipped on both paths, never rendered as "None"
+    got = sql_pattern_filter(df, ["ADD COLUMN string$"]).collect()
+    assert len(got) == 5
 
     # Python twin renders identically and matches the same statements
     d = {"action": "add_column", "name": "secret", "type": "string"}
@@ -174,6 +179,9 @@ def test_sql_pattern_filter_library(spark):
     assert not sql_pattern_skip(d, ["nomatch"])
     assert sql_pattern_skip({"action": "truncate_table"},
                             ["^TRUNCATE TABLE audit$"], table="audit")
+    nameless = {"action": "add_column", "type": "string"}
+    assert render_ddl_sql(nameless) == "ALTER TABLE transcripts ADD COLUMN string"
+    assert sql_pattern_skip(nameless, ["ADD COLUMN string$"])
 
 
 def test_sql_pattern_filter_replay_matches_filtered_oracle(spark, tmp_path):
@@ -269,7 +277,10 @@ def test_expr_filter_per_op(spark):
 def test_canal_pb_wire_parses_as_protobuf(spark):
     """cdc_encode_canal_pb emits genuine protobuf wire format: a minimal
     independent TLV/varint reader (written here, sharing no code with the
-    encoder) must round-trip the header and columns of real rows."""
+    encoder) must round-trip the header and the RowData column images of
+    real rows — a DELETE's image in beforeColumns only."""
+    import json
+
     from tiflow_spark.queries import cdc_encode_canal_pb
 
     def rd_varint(b, i):
@@ -299,23 +310,29 @@ def test_canal_pb_wire_parses_as_protobuf(spark):
 
     rows = cdc_encode_canal_pb(spark, "/root/testdata/sf0.001").limit(5).collect()
     assert rows
+    names = [(0, b"conv_id"), (1, b"turn_idx"), (2, b"payload")]
+    saw_delete = False
     for r in rows:
-        wire = bytes.fromhex(r["wire_hex"])
+        wire = bytes.fromhex(r["envelope"])
         ln, i = rd_varint(wire, 0)
         assert ln == len(wire) - i  # length-prefixed framing
-        entry = dict()
-        cols = []
-        for fno, v in rd_fields(wire[i:]):
-            (cols.append(v) if fno == 3 else entry.update({fno: v}))
-        header = {f: v for f, v in rd_fields(entry[1])}
+        entry = dict(rd_fields(wire[i:]))
+        header = dict(rd_fields(entry[1]))
         assert header[1] == b"app" and 1 <= header[4] <= 3
         assert entry[2] == 0  # isDdl = false
-        names = []
-        for c in cols:
-            cf = {f: v for f, v in rd_fields(c)}
-            names.append(cf[2])
-            int(cf[3]) if cf[2] == b"value_milli" else None
-        assert names == [b"user_id", b"value_milli"]
+        images = {1: [], 2: []}  # beforeColumns, afterColumns
+        for fno, c in rd_fields(entry[3]):
+            cf = dict(rd_fields(c))
+            images[fno].append((cf[1], cf[2], cf[3]))
+        row = images[1] if header[4] == 3 else images[2]
+        assert [(idx, name) for idx, name, _ in row] == names
+        assert int(row[1][2]) == 0  # turn_idx
+        image = json.loads(row[2][2])
+        assert image["user_id"] == int(row[0][2])  # conv_id is the user
+        if header[4] == 3:
+            assert images[2] == []
+            saw_delete = True
+    assert saw_delete
 
 
 def test_craft_wire_round_trips(spark):
@@ -323,7 +340,9 @@ def test_craft_wire_round_trips(spark):
     independent reader locates the size tables via the tail's REVERSED
     uvarint (read backward from the last byte), validates every recorded
     segment size against the actual layout, and decodes the term
-    dictionary and zigzag-varint column values."""
+    dictionary and both column groups' values."""
+    import json
+
     from tiflow_spark.queries import cdc_encode_craft
 
     def uvar(b, i):
@@ -339,10 +358,32 @@ def test_craft_wire_round_trips(spark):
         u, i = uvar(b, i)
         return (u >> 1) ^ -(u & 1), i
 
+    def group(g, ncols_want, types):
+        ncols, i = uvar(g, 1)
+        refs, ref = [], 0
+        for k in range(ncols):
+            d, i = zig(g, i)
+            ref = d if k == 0 else ref + d
+            refs.append(ref)
+        assert ncols == ncols_want and g[i:i + ncols] == types
+        i += ncols
+        mask = g[i]
+        i += 1
+        lens = []
+        for _ in range(ncols):
+            ln, i = uvar(g, i)
+            lens.append(ln)
+        vals = []
+        for ln in lens:
+            vals.append(g[i:i + ln])
+            i += ln
+        assert i == len(g)
+        return refs, mask, vals
+
     rows = cdc_encode_craft(spark, "/root/testdata/sf0.001").limit(5).collect()
     assert rows
     for r in rows:
-        b = bytes.fromhex(r["wire_hex"])
+        b = bytes.fromhex(r["envelope"])
         # tail-first reversed uvarint: read bytes backward as a varint
         j, v, shift = len(b) - 1, 0, 0
         while True:
@@ -352,7 +393,7 @@ def test_craft_wire_round_trips(spark):
             if not b[j + 1] & 0x80:
                 break
         tables = b[j + 1 - v:j + 1]
-        # size tables: meta [header, dict(delta)], body, column-group
+        # size tables: meta [header, dict(delta)], body, column groups
         i = 0
         n, i = uvar(tables, i)
         assert n == 2
@@ -362,8 +403,9 @@ def test_craft_wire_round_trips(spark):
         n, i = uvar(tables, i)
         bsize, i = zig(tables, i)
         n, i = uvar(tables, i)
-        gsize, i = zig(tables, i)
-        assert i == len(tables) and bsize == gsize
+        g1size, i = zig(tables, i)
+        g2size, i = zig(tables, i)
+        assert n == 2 and i == len(tables) and bsize == g1size + g2size
         assert b[0] == 0x01  # craft Version1
         assert 1 + hsize + bsize + dsize == j + 1 - v  # layout adds up
         # term dictionary
@@ -378,24 +420,20 @@ def test_craft_wire_round_trips(spark):
         for ln in lens:
             terms.append(d[i:i + ln])
             i += ln
-        assert terms[0] == b"app" and terms[2:] == [b"user_id", b"value_milli"]
-        # column group: type, count, name refs (delta), mysql types, values
+        assert terms[0] == b"app"
+        assert terms[2:] == [b"conv_id", b"turn_idx", b"payload"]
+        # new-values group: conv_id, turn_idx, payload (null-mask bit 2)
         body = b[1 + hsize:1 + hsize + bsize]
-        i = 0
-        assert body[0] == 0x01
-        ncols, i = uvar(body, 1)
-        r0, i = zig(body, i)
-        rd, i = zig(body, i)
-        assert ncols == 2 and (r0, r0 + rd) == (2, 3)
-        assert body[i:i + 2] == b"\x08\x08"  # TypeLongLong
-        i += 2
-        l0, i = uvar(body, i)
-        l1, i = uvar(body, i)
-        uid, i2 = zig(body, i)
-        assert i2 - i == l0
-        vm, i3 = zig(body, i2)
-        assert i3 - i2 == l1 and i3 == len(body)
-        assert uid >= 0 and vm >= 0
+        assert body[0] == 0x01 and body[g1size] == 0x02
+        refs, mask, (conv, turn, pay) = group(body[:g1size], 3, b"\x0f\x08\x0f")
+        assert refs == [2, 3, 4] and zig(turn, 0) == (0, len(turn))
+        if not mask & 4:
+            assert json.loads(pay)["user_id"] == int(conv)
+        # old-values group: the pre-image payload
+        refs, mask, (pre,) = group(body[g1size:], 1, b"\x0f")
+        assert refs == [4]
+        if not mask & 1:
+            assert json.loads(pre)["user_id"] == int(conv)
 
 
 def test_library_filters_null_keep(spark):

@@ -16,18 +16,30 @@ _text = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",), min_codepoint=1),
     min_size=0, max_size=80,
 )
+# seq, op, commit_ts, start_ts, schema_version, conv_id (non-null), turn_idx
+_head = (
+    st.integers(min_value=0, max_value=2**40),
+    st.sampled_from(["I", "U", "D"]),
+    st.integers(min_value=0, max_value=2**42),
+    st.one_of(st.none(), st.integers(min_value=0, max_value=2**42)),
+    st.one_of(st.none(), st.integers(min_value=0, max_value=1000)),
+    _text.filter(lambda s: len(s) > 0),
+    st.integers(min_value=0, max_value=2**31 - 1),
+)
+_tbl = st.one_of(st.none(), _text.filter(lambda s: len(s) > 0))
 _event = st.tuples(
-    st.integers(min_value=0, max_value=2**40),          # seq
-    st.sampled_from(["I", "U", "D"]),                   # op
-    st.integers(min_value=0, max_value=2**42),          # commit_ts
-    st.one_of(st.none(), st.integers(min_value=0, max_value=2**42)),  # start_ts
-    st.one_of(st.none(), st.integers(min_value=0, max_value=1000)),   # schema_v
-    _text.filter(lambda s: len(s) > 0),                 # conv_id (non-null)
-    st.integers(min_value=0, max_value=2**31 - 1),      # turn_idx
+    *_head,
     st.one_of(st.none(), _text),                        # payload
     st.one_of(st.none(), _text),                        # pre_payload
-    st.one_of(st.none(), _text.filter(lambda s: len(s) > 0)),  # tbl
+    _tbl,
 )
+# the versioned Avro wire's payloads are JSON rows of its registry fields
+_row = st.one_of(st.none(), st.fixed_dictionaries({
+    "n": st.one_of(st.none(), st.integers(min_value=-2**40, max_value=2**40)),
+    "s": st.one_of(st.none(), _text),
+    "at": st.one_of(st.none(), st.datetimes().map(lambda d: d.isoformat())),
+}))
+_avro_event = st.tuples(*_head, _row, _row, _tbl)
 
 _SCHEMA = (
     "seq long, op string, commit_ts long, start_ts long, schema_version int, "
@@ -44,15 +56,26 @@ def _df(spark, events):
 
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(events=st.lists(_event, min_size=1, max_size=12))
+@given(events=st.lists(_avro_event, min_size=1, max_size=12))
 def test_avro_wire_property(spark, events):
-    from tiflow_spark.sinks.mq import _avro_parse_row, avro_envelope
+    """Versioned Avro under a registry with an integral, a string and a
+    timestamp field: every envelope field and every payload field value
+    (nulls, arbitrary unicode, 2^40-range integers of either sign) come
+    back off the wire."""
+    import json
 
-    out = _df(spark, events).withColumn("w", avro_envelope()).collect()
-    for r, want in zip(out, events):
-        got = _avro_parse_row(r["w"])
-        assert got[:9] == want[:9]          # full envelope on the avro wire
-        assert got[11] == want[9]           # tbl
+    from tests.helpers import avro_roundtrip
+
+    def text(row):
+        return None if row is None else json.dumps(row)
+
+    rows = [e[:7] + (text(e[7]), text(e[8]), e[9]) for e in events]
+    for (_, got), want in zip(avro_roundtrip(_df(spark, rows)), events):
+        assert (got.seq, got.op, got.commit_ts, got.start_ts) == want[:4]
+        assert (got.conv_id, got.turn_idx, got.tbl) == (want[5], want[6], want[9])
+        assert got.schema_version == 1  # the one registry version
+        assert json.loads(got.payload or "null") == want[7]
+        assert json.loads(got.pre_payload or "null") == want[8]
 
 
 @settings(max_examples=10, deadline=None,

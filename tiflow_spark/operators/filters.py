@@ -151,25 +151,34 @@ def render_ddl_sql(ddl: dict, table: str = "transcripts") -> str:
     rendering in ``sql_pattern_filter``."""
     if ddl.get("query"):
         return str(ddl["query"])
-    a = ddl.get("action", "")
+    a = ddl.get("action")
     t = ddl.get("table") or table
+    name, new_name = ddl.get("name"), ddl.get("new_name")
+    typ, where = ddl.get("type"), ddl.get("where")
+    typ = "string" if typ is None else typ
+    where = "" if where is None else where
+
+    def ws(*parts) -> str:
+        # concat_ws twin: a missing part is skipped, never printed as None
+        return " ".join(str(p) for p in parts if p is not None)
+
     if a == "add_column":
-        return f"ALTER TABLE {t} ADD COLUMN {ddl.get('name')} {ddl.get('type', 'string')}"
+        return ws("ALTER TABLE", t, "ADD COLUMN", name, typ)
     if a == "drop_column":
-        return f"ALTER TABLE {t} DROP COLUMN {ddl.get('name')}"
+        return ws("ALTER TABLE", t, "DROP COLUMN", name)
     if a == "rename_column":
-        return f"ALTER TABLE {t} RENAME COLUMN {ddl.get('name')} TO {ddl.get('new_name')}"
+        return ws("ALTER TABLE", t, "RENAME COLUMN", name, "TO", new_name)
     if a == "modify_column":
-        return f"ALTER TABLE {t} MODIFY COLUMN {ddl.get('name')} {ddl.get('type', 'string')}"
+        return ws("ALTER TABLE", t, "MODIFY COLUMN", name, typ)
     if a == "truncate_table":
         return f"TRUNCATE TABLE {t}"
     if a == "add_partition":
-        return f"ALTER TABLE {t} ADD PARTITION ({ddl.get('where', '')})"
+        return f"ALTER TABLE {t} ADD PARTITION ({where})"
     if a == "drop_partition":
-        return f"ALTER TABLE {t} DROP PARTITION ({ddl.get('where', '')})"
+        return f"ALTER TABLE {t} DROP PARTITION ({where})"
     if a == "truncate_partition":
-        return f"ALTER TABLE {t} TRUNCATE PARTITION ({ddl.get('where', '')})"
-    return f"{a.upper().replace('_', ' ')} {t}"
+        return f"ALTER TABLE {t} TRUNCATE PARTITION ({where})"
+    return ws(a.upper().replace("_", " ") if a is not None else None, t)
 
 
 def sql_pattern_skip(ddl: dict, patterns: list[str] | None,

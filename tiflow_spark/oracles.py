@@ -6,7 +6,8 @@ are md5-derived (identical across engines); floating-point paths use
 double-precision left-to-right sums, matching Spark's zip_with/aggregate
 evaluation order, and are rounded before comparison/ranking.
 
-Long repetitive statements (minhash/simhash) are generated programmatically.
+Long repetitive statements (minhash/simhash, the binary MQ wires) are
+generated programmatically.
 """
 
 from __future__ import annotations
@@ -36,157 +37,248 @@ _SHINGLES = """
 """
 
 
-def _avro_varint_sql(v: str, septets: int = 9) -> str:
-    """Base-128 varint of a nonnegative expr as lowercase hex — the same
-    unroll widths as the Spark side (queries._varint_hex): 9 septets for
-    data values (full nonnegative int64), 5 for structurally-bounded
-    lengths/counts/refs."""
-    parts = []
-    for i in range(septets):
-        sept = f"((({v}) >> {7 * i}) & 127)"
-        more = f"((({v}) >> {7 * (i + 1)}) > 0)"
-        byte = f"({sept} + CASE WHEN {more} THEN 128 ELSE 0 END)"
-        cond = "TRUE" if i == 0 else f"(({v}) >= {1 << (7 * i)})"
-        parts.append(f"CASE WHEN {cond} THEN printf('%02x', {byte}) ELSE '' END")
-    return " || ".join(parts)
+# ------------------------------------------------------------ MQ wires
+# DuckDB mirrors of the MQ sink's envelopes (sinks/mq.py), each written once
+# over _CHANGE, the same change-event projection of ``events`` as
+# queries.events_as_change_events. Binary wires are lowercase hex, staged
+# through CTEs so a length prefix refers to an already-built column.
+
+_CHANGE = f"""
+  SELECT event_id, seq, op, commit_ts, start_ts, 1 AS schema_version,
+         CAST(user_id AS VARCHAR) AS conv_id, 0 AS turn_idx,
+         CASE WHEN op <> 'D' THEN '{{"user_id":' || CAST(user_id AS VARCHAR)
+              || ',"event_type":"' || event_type || '"}}' END AS payload,
+         CASE WHEN op <> 'I' THEN '{{"user_id":' || CAST(user_id AS VARCHAR)
+              || '}}' END AS pre_payload,
+         event_type AS tbl
+  FROM ({_FEED})
+"""
 
 
-def _pb_str_sql(tag_byte: int, expr: str) -> str:
-    """Protobuf length-delimited string field as hex (mirrors
-    queries._pb_str_field)."""
-    return (
-        f"'{tag_byte:02x}' || {_avro_varint_sql(f'strlen({expr})', 5)}"
-        f" || lower(hex({expr}))"
+def _json_obj(*fields: tuple[str, str]) -> str:
+    """JSON object text the way Spark's ``to_json`` writes a struct: fields
+    in order, a NULL-valued field omitted (``'"k":' || NULL`` is NULL and
+    concat_ws skips it). Each value is an expression yielding JSON text."""
+    parts = ", ".join(f"""'"{k}":' || {v}""" for k, v in fields)
+    return f"'{{' || concat_ws(',', {parts}) || '}}'"
+
+
+def _js(e: str) -> str:
+    """A string expression as a JSON string literal."""
+    return f"to_json({e})::VARCHAR"
+
+
+def _jn(e: str) -> str:
+    """A numeric expression as a JSON number."""
+    return f"CAST({e} AS VARCHAR)"
+
+
+_OP_NAMES = "CASE op WHEN 'I' THEN '{}' WHEN 'D' THEN '{}' ELSE '{}' END"
+# canal EventType / craft event type: INSERT=1, UPDATE=2, DELETE=3
+_ETYPE = "CASE op WHEN 'I' THEN 1 WHEN 'D' THEN 3 ELSE 2 END"
+_TBL = "coalesce(tbl, 'transcripts')"
+_ROW = _json_obj(("conv_id", _js("conv_id")), ("turn_idx", _jn("turn_idx")),
+                 ("payload", _js("payload")))
+_OLD = _json_obj(("payload", _js("pre_payload")))
+
+_OPEN_JSON = _json_obj(
+    ("t", _js("op")), ("ts", _jn("commit_ts")), ("sts", _jn("start_ts")),
+    ("seq", _jn("seq")), ("conv_id", _js("conv_id")),
+    ("turn_idx", _jn("turn_idx")), ("payload", _js("payload")),
+    ("pre_payload", _js("pre_payload")), ("v", _jn("schema_version")),
+)
+_MAXWELL = _json_obj(
+    ("database", "'\"app\"'"), ("table", _js(_TBL)),
+    ("type", _js(_OP_NAMES.format("insert", "delete", "update"))),
+    ("ts", _jn("commit_ts")), ("data", _ROW),
+    ("old", f"CASE WHEN pre_payload IS NOT NULL THEN {_OLD} END"),
+)
+_CANAL_JSON = _json_obj(
+    ("id", _jn("seq")), ("database", "'\"app\"'"), ("table", _js(_TBL)),
+    ("type", _js(_OP_NAMES.format("INSERT", "DELETE", "UPDATE"))),
+    ("es", _jn("commit_ts")), ("ts", _jn("commit_ts")),
+    ("data", f"'[' || {_ROW} || ']'"),
+    ("old", f"CASE WHEN pre_payload IS NOT NULL THEN '[' || {_OLD} || ']' END"),
+)
+
+
+def _septet_sql(v: str, i: int) -> str:
+    sept = f"((({v}) >> {7 * i}) & 127)"
+    more = f"((({v}) >> {7 * (i + 1)}) > 0)"
+    byte = f"({sept} + CASE WHEN {more} THEN 128 ELSE 0 END)"
+    cond = "TRUE" if i == 0 else f"(({v}) >= {1 << (7 * i)})"
+    return f"CASE WHEN {cond} THEN printf('%02x', {byte}) ELSE '' END"
+
+
+def _uv(v: str, septets: int = 9) -> str:
+    """Base-128 varint of a nonnegative expr as lowercase hex, unrolled to
+    the Spark side's widths: 9 septets for data values, 5 for lengths,
+    counts and refs."""
+    return " || ".join(_septet_sql(v, i) for i in range(septets))
+
+
+def _uv_rev(v: str, septets: int = 9) -> str:
+    """Craft's reversed uvarint: the same bytes, highest septet first."""
+    return " || ".join(_septet_sql(v, i) for i in reversed(range(septets)))
+
+
+def _zz(e: str, septets: int = 9) -> str:
+    """Zigzag varint of a possibly-negative expr."""
+    return _uv(f"(CASE WHEN ({e}) >= 0 THEN ({e}) * 2 ELSE -({e}) * 2 - 1 END)",
+               septets)
+
+
+def _hexlen(h: str) -> str:
+    return f"(length({h}) // 2)"
+
+
+def _wire_select(cte: str) -> str:
+    """Key, envelope and its md5 over a CTE chain ending in ``enc``."""
+    return (f"WITH change AS ({_CHANGE}),\n{cte}\n"
+            "SELECT event_id, envelope, md5(envelope) AS envelope_md5 FROM enc")
+
+
+def _json_wire_sql(envelope: str) -> str:
+    return _wire_select(f"enc AS (SELECT event_id, {envelope} AS envelope"
+                        " FROM change)")
+
+
+def _avro_sql() -> str:
+    """Versioned Avro under the one-version registry of cdc_encode_avro:
+    schema id 1 (the first id the registry assigns), then the change
+    envelope and the typed Row record (user_id long, event_type string)."""
+
+    def s(x):
+        return f"{_uv(f'strlen({x}) * 2', 5)} || lower(hex({x}))"
+
+    def opt(x, enc):
+        return f"CASE WHEN {x} IS NULL THEN '00' ELSE '02' || {enc} END"
+
+    def row(src, p):
+        uid, et = p + "_uid", p + "_et"
+        fields = f"{opt(uid, _zz(uid))} || {opt(et, s(et))}"
+        return f"CASE WHEN {src} IS NULL THEN '00' ELSE '02' || {fields} END"
+
+    envelope = " || ".join([
+        "'0000000001'", _zz("seq"), s("op"), _zz("commit_ts"),
+        opt("start_ts", _zz("start_ts")), s("conv_id"), _zz("turn_idx"),
+        row("payload", "p"), row("pre_payload", "q"), opt("tbl", s("tbl")),
+    ])
+    return _wire_select(
+        "f AS (SELECT *,"
+        " CAST(json_extract_string(payload, '$.user_id') AS BIGINT) AS p_uid,"
+        " json_extract_string(payload, '$.event_type') AS p_et,"
+        " CAST(json_extract_string(pre_payload, '$.user_id') AS BIGINT) AS q_uid,"
+        " json_extract_string(pre_payload, '$.event_type') AS q_et"
+        " FROM change),\n"
+        f"enc AS (SELECT event_id, {envelope} AS envelope FROM f)"
     )
 
 
 def _canal_pb_sql() -> str:
-    """DuckDB mirror of queries.cdc_encode_canal_pb: identical tag bytes,
-    varints, and length-delimited framing, built over staged CTEs so nested
-    message lengths come from the already-composed hex columns."""
+    """Canal protobuf: header and Column-message bodies first, then RowData
+    (a DELETE's image in beforeColumns only), then the framed Entry."""
+
+    def pb_str(tag, x):
+        return f"'{tag:02x}' || {_uv(f'strlen({x})', 5)} || lower(hex({x}))"
+
+    def pb_msg(tag, h):
+        return f"'{tag:02x}' || {_uv(_hexlen(h), 5)} || {h}"
+
+    def col(idx, name, value):
+        return (f"'08' || {_uv(str(idx), 5)} || {pb_str(0x12, repr(name))}"
+                f" || {pb_str(0x1A, value)}")
+
+    def image(tag, cols):
+        return " || ".join(
+            f"CASE WHEN {v} IS NULL THEN '' ELSE {pb_msg(tag, c)} END"
+            for c, v in cols
+        )
+
     header = " || ".join([
-        _pb_str_sql(0x0A, "'app'"),
-        _pb_str_sql(0x12, "event_type"),
-        "'18'", _avro_varint_sql("commit_ts"),
-        "'20'", _avro_varint_sql(
-            "CASE op WHEN 'I' THEN 1 WHEN 'D' THEN 3 ELSE 2 END", 5),
+        pb_str(0x0A, "'app'"), pb_str(0x12, _TBL),
+        "'18'", _uv("commit_ts"),
+        "'20'", _uv(_ETYPE, 5),
     ])
-    col0 = " || ".join([
-        "'08'", _avro_varint_sql("0", 5),
-        _pb_str_sql(0x12, "'user_id'"),
-        _pb_str_sql(0x1A, "CAST(user_id AS VARCHAR)"),
-    ])
-    col1 = " || ".join([
-        "'08'", _avro_varint_sql("1", 5),
-        _pb_str_sql(0x12, "'value_milli'"),
-        _pb_str_sql(0x1A, "CAST(CAST(round(value * 1000) AS BIGINT) AS VARCHAR)"),
-    ])
-    entry = " || ".join([
-        "'0a'", _avro_varint_sql("length(header_hex) // 2", 5), "header_hex",
-        "'1000'",
-        "'1a'", _avro_varint_sql("length(c0_hex) // 2", 5), "c0_hex",
-        "'1a'", _avro_varint_sql("length(c1_hex) // 2", 5), "c1_hex",
-    ])
-    return (
-        "WITH feed AS (" + _FEED + "),\n"
-        "parts AS (SELECT event_id, " + header + " AS header_hex, "
-        + col0 + " AS c0_hex, " + col1 + " AS c1_hex FROM feed),\n"
-        "e AS (SELECT event_id, " + entry + " AS entry_hex FROM parts)\n"
-        "SELECT event_id, "
-        + _avro_varint_sql("length(entry_hex) // 2", 5)
-        + " || entry_hex AS wire_hex, md5("
-        + _avro_varint_sql("length(entry_hex) // 2", 5)
-        + " || entry_hex) AS wire_md5 FROM e"
+    key = [("c_conv", "conv_id"), ("c_turn", "turn_idx")]
+    before = image(0x0A, key + [("c_pre", "pre_payload")])
+    after = image(0x12, key + [("c_pay", "payload")])
+    rowdata = (f"CASE WHEN op = 'D' THEN {before} ELSE "
+               f"{image(0x0A, [('c_pre', 'pre_payload')])} END || "
+               f"CASE WHEN op = 'D' THEN '' ELSE {after} END")
+    return _wire_select(
+        f"c AS (SELECT *, {header} AS hdr,"
+        f" {col(0, 'conv_id', 'conv_id')} AS c_conv,"
+        f" {col(1, 'turn_idx', 'CAST(turn_idx AS VARCHAR)')} AS c_turn,"
+        f" {col(2, 'payload', 'payload')} AS c_pay,"
+        f" {col(2, 'payload', 'pre_payload')} AS c_pre FROM change),\n"
+        f"r AS (SELECT event_id, hdr, {rowdata} AS rowdata FROM c),\n"
+        f"e AS (SELECT event_id, {pb_msg(0x0A, 'hdr')} || '1000' || "
+        f"{pb_msg(0x1A, 'rowdata')} AS entry FROM r),\n"
+        f"enc AS (SELECT event_id, {_uv(_hexlen('entry'))} || entry"
+        " AS envelope FROM e)"
     )
-
-
-def _zigzag_sql(e: str, septets: int = 9) -> str:
-    """Zigzag varint of a possibly-negative SQL expr (mirrors
-    queries._zigzag_hex)."""
-    return _avro_varint_sql(
-        f"(CASE WHEN ({e}) >= 0 THEN ({e}) * 2 ELSE -({e}) * 2 - 1 END)",
-        septets,
-    )
-
-
-def _uvarint_rev_sql(v: str, septets: int = 9) -> str:
-    """Reversed uvarint (mirrors queries._uvarint_rev_hex): same bytes,
-    highest septet first."""
-    parts = []
-    for i in reversed(range(septets)):
-        sept = f"((({v}) >> {7 * i}) & 127)"
-        more = f"((({v}) >> {7 * (i + 1)}) > 0)"
-        byte = f"({sept} + CASE WHEN {more} THEN 128 ELSE 0 END)"
-        cond = "TRUE" if i == 0 else f"(({v}) >= {1 << (7 * i)})"
-        parts.append(f"CASE WHEN {cond} THEN printf('%02x', {byte}) ELSE '' END")
-    return " || ".join(parts)
 
 
 def _craft_sql() -> str:
-    """DuckDB mirror of queries.cdc_encode_craft, staged CTEs for sizes."""
-    uv = _avro_varint_sql
-    zz = _zigzag_sql
+    """Craft: header, new/old column groups and term dictionary first, then
+    the size tables over their byte lengths, then the reversed trailer."""
     header = " || ".join([
-        uv("1", 5), uv("commit_ts"),
-        uv("CASE op WHEN 'I' THEN 1 WHEN 'D' THEN 3 ELSE 2 END", 5),
-        zz("0", 5), zz("1", 5),
+        _uv("1", 5), _uv("commit_ts"),
+        _uv(_ETYPE, 5),
+        _zz("0", 5), _zz("1", 5),
     ])
-    v0 = zz("user_id")
-    v1 = zz("CAST(round(value * 1000) AS BIGINT)")
-    body = " || ".join([
-        "'01'", uv("2", 5), zz("2", 5), zz("1", 5), "'0808'",
-        uv(f"length({v0}) // 2", 5), uv(f"length({v1}) // 2", 5), v0, v1,
+    g1 = " || ".join([
+        "'01'", _uv("3", 5), _zz("2", 5), _zz("1", 5), _zz("1", 5), "'0f080f'",
+        "CASE WHEN payload IS NULL THEN '04' ELSE '00' END",
+        _uv(_hexlen("conv_hex"), 5), _uv(_hexlen("turn_hex"), 5),
+        _uv(_hexlen("pay_hex"), 5), "conv_hex", "turn_hex", "pay_hex",
     ])
-    dic = " || ".join([
-        uv("4", 5), uv("3", 5), uv("strlen(event_type)", 5), uv("7", 5),
-        uv("11", 5),
-        "lower(hex('app'))", "lower(hex(event_type))",
-        "lower(hex('user_id'))", "lower(hex('value_milli'))",
+    g2 = " || ".join([
+        "'02'", _uv("1", 5), _zz("4", 5), "'0f'",
+        "CASE WHEN pre_payload IS NULL THEN '01' ELSE '00' END",
+        _uv(_hexlen("pre_hex"), 5), "pre_hex",
     ])
+    terms = ["'app'", _TBL, "'conv_id'", "'turn_idx'", "'payload'"]
+    dic = " || ".join(
+        [_uv("5", 5)] + [_uv(f"strlen({t})", 5) for t in terms]
+        + [f"lower(hex({t}))" for t in terms]
+    )
     tables = " || ".join([
-        uv("2", 5), zz("length(header_hex) // 2", 5),
-        zz("length(dict_hex) // 2 - length(header_hex) // 2", 5),
-        uv("1", 5), zz("length(body_hex) // 2", 5),
-        uv("1", 5), zz("length(body_hex) // 2", 5),
+        _uv("2", 5), _zz(_hexlen("hdr"), 5),
+        _zz(f"{_hexlen('dic')} - {_hexlen('hdr')}", 5),
+        _uv("1", 5), _zz(f"{_hexlen('g1')} + {_hexlen('g2')}", 5),
+        _uv("2", 5), _zz(_hexlen("g1"), 5), _zz(_hexlen("g2"), 5),
     ])
-    return (
-        "WITH feed AS (" + _FEED + "),\n"
-        "parts AS (SELECT event_id, " + header + " AS header_hex, "
-        + body + " AS body_hex, " + dic + " AS dict_hex FROM feed),\n"
-        "st AS (SELECT event_id, header_hex, body_hex, dict_hex, "
-        + tables + " AS tables_hex FROM parts),\n"
-        "w AS (SELECT event_id, '01' || header_hex || body_hex || dict_hex"
-        " || tables_hex || " + _uvarint_rev_sql("length(tables_hex) // 2", 5)
-        + " AS wire_hex FROM st)\n"
-        "SELECT event_id, wire_hex, md5(wire_hex) AS wire_md5 FROM w"
+    return _wire_select(
+        "h AS (SELECT *, lower(hex(conv_id)) AS conv_hex,"
+        f" {_zz('CAST(turn_idx AS BIGINT)')} AS turn_hex,"
+        " coalesce(lower(hex(payload)), '') AS pay_hex,"
+        " coalesce(lower(hex(pre_payload)), '') AS pre_hex FROM change),\n"
+        f"p AS (SELECT event_id, {header} AS hdr, {g1} AS g1, {g2} AS g2,"
+        f" {dic} AS dic FROM h),\n"
+        f"t AS (SELECT *, {tables} AS tbls FROM p),\n"
+        "enc AS (SELECT event_id, '01' || hdr || g1 || g2 || dic || tbls || "
+        f"{_uv_rev(_hexlen('tbls'), 5)} AS envelope FROM t)"
     )
 
 
-def _avro_sql() -> str:
-    from tiflow_spark.queries import AVRO_SCHEMA_JSON
-
-    body = " || ".join(
-        [
-            _avro_varint_sql("user_id * 2"),
-            _avro_varint_sql("commit_ts * 2"),
-            _avro_varint_sql("strlen(op) * 2", 5),
-            "lower(hex(op))",
-            _avro_varint_sql("strlen(event_type) * 2", 5),
-            "lower(hex(event_type))",
-        ]
-    )
-    return (
-        "WITH feed AS (" + _FEED + "),\n"
-        "reg AS (SELECT 1 AS schema_id, md5('" + AVRO_SCHEMA_JSON + "')"
-        " AS fingerprint),\n"
-        "enc AS (\n"
-        "  SELECT event_id, schema_id, fingerprint,\n"
-        "         '00' || printf('%08x', schema_id) || " + body
-        + " AS wire_hex\n"
-        "  FROM feed, reg)\n"
-        "SELECT event_id, schema_id, fingerprint, wire_hex,"
-        " md5(wire_hex) AS wire_md5 FROM enc"
-    )
+_MQ_DISPATCH = f"""
+WITH change AS ({_CHANGE}),
+enc AS (
+  SELECT *, {_OPEN_JSON} AS envelope,
+         ((ascii(substr(md5(conv_id || '|' || CAST(turn_idx AS VARCHAR)), 1, 1)) * 256
+         + ascii(substr(md5(conv_id || '|' || CAST(turn_idx AS VARCHAR)), 2, 1))) % 8)
+           AS "partition"
+  FROM change)
+SELECT "partition",
+       CAST(row_number() OVER (
+         PARTITION BY "partition"
+         ORDER BY commit_ts, CASE WHEN op = 'D' THEN 0 ELSE 1 END,
+                  start_ts, seq) - 1 AS BIGINT) AS "offset",
+       envelope, md5(envelope) AS envelope_md5
+FROM enc
+"""
 
 
 _JACCARD_CTES = f"""{_SHINGLES},
@@ -440,15 +532,6 @@ SELECT user_id, event_id, op, value,
 FROM feed WHERE user_id % 10 = 0
 WINDOW w AS (PARTITION BY user_id ORDER BY commit_ts)
 """,
-    "cdc_encode_json": f"""
-WITH feed AS ({_FEED}),
-enc AS (
-  SELECT event_id,
-         to_json({{'u': user_id, 'ts': commit_ts, 'o': op, 't': event_type}})::VARCHAR
-           AS envelope
-  FROM feed)
-SELECT event_id, envelope, md5(envelope) AS envelope_md5 FROM enc
-""",
     "cdc_cyclic_filter": f"""
 WITH feed AS ({_FEED}),
 marks AS (
@@ -478,56 +561,13 @@ d AS (
 SELECT bucket, count(*) AS n_rows, CAST(sum(digest) AS BIGINT) AS checksum
 FROM d GROUP BY 1
 """,
-    "cdc_encode_maxwell": f"""
-WITH feed AS ({_FEED}),
-enc AS (
-  SELECT event_id,
-         to_json({{'database': 'app', 'table': event_type,
-                  'type': CASE op WHEN 'I' THEN 'insert'
-                                  WHEN 'D' THEN 'delete'
-                                  ELSE 'update' END,
-                  'ts': commit_ts,
-                  'data': {{'user_id': user_id, 'event_id': event_id}}}})::VARCHAR
-           AS envelope
-  FROM feed)
-SELECT event_id, envelope, md5(envelope) AS envelope_md5 FROM enc
-""",
-    "cdc_encode_canal": f"""
-WITH feed AS ({_FEED}),
-enc AS (
-  SELECT event_id,
-         to_json({{'database': 'app', 'table': event_type,
-                  'pkNames': ['user_id'], 'isDdl': false,
-                  'type': CASE op WHEN 'I' THEN 'INSERT'
-                                  WHEN 'D' THEN 'DELETE'
-                                  ELSE 'UPDATE' END,
-                  'es': commit_ts,
-                  'data': [{{'user_id': user_id,
-                            'value_milli': CAST(round(value * 1000) AS BIGINT)}}]}})::VARCHAR
-           AS envelope
-  FROM feed)
-SELECT event_id, envelope, md5(envelope) AS envelope_md5 FROM enc
-""",
+    "cdc_encode_json": _json_wire_sql(_OPEN_JSON),
+    "cdc_encode_maxwell": _json_wire_sql(_MAXWELL),
+    "cdc_encode_canal": _json_wire_sql(_CANAL_JSON),
     "cdc_encode_avro": _avro_sql(),
     "cdc_encode_canal_pb": _canal_pb_sql(),
     "cdc_encode_craft": _craft_sql(),
-    "cdc_mq_dispatch": f"""
-WITH feed AS ({_FEED}),
-enc AS (
-  SELECT *, to_json({{'u': user_id, 'ts': commit_ts, 'o': op}})::VARCHAR
-           AS envelope,
-         ((ascii(substr(md5(coalesce(CAST(user_id AS VARCHAR), '')), 1, 1)) * 256
-         + ascii(substr(md5(coalesce(CAST(user_id AS VARCHAR), '')), 2, 1))) % 8)
-           AS "partition"
-  FROM feed)
-SELECT "partition",
-       CAST(row_number() OVER (
-         PARTITION BY "partition"
-         ORDER BY commit_ts, CASE WHEN op = 'D' THEN 0 ELSE 1 END,
-                  start_ts, seq) - 1 AS BIGINT) AS "offset",
-       envelope, md5(envelope) AS envelope_md5
-FROM enc
-""",
+    "cdc_mq_dispatch": _MQ_DISPATCH,
     "cdc_batch_reduce": f"""
 WITH feed AS ({_FEED}),
 b AS (

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from tiflow_spark.functions import dedup, multimodal, similarity, text
 from tiflow_spark.functions.hashing import md5_bucket
+from tiflow_spark.model import event_order_cols
 from tiflow_spark.operators.compactor import compact_changes, split_updates
 from tiflow_spark.operators.filters import (
     expr_filter,
@@ -25,6 +26,8 @@ from tiflow_spark.operators.filters import (
     op_class_filter,
 )
 from tiflow_spark.operators.watermark import partition_frontier, watermark_cut
+from tiflow_spark.registry import SchemaRegistry
+from tiflow_spark.sinks import mq
 
 # ---------------------------------------------------------------- loaders
 
@@ -249,7 +252,6 @@ def cdc_schema_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     active_from_ts <= commit_ts - 1, compiled to a chained CASE (the binary
     search of schema_storage.go:767-774 constant-folded per row)."""
     from tiflow_spark.engine import schema_version_expr
-    from tiflow_spark.registry import SchemaRegistry
 
     reg = SchemaRegistry.initial()
     reg.apply_ddl({"action": "add_column", "name": "note", "type": "string"}, 3000)
@@ -346,28 +348,6 @@ def cdc_old_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cdc_encode_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sink codec (K5, open-protocol JSON analogue): encode each change
-    event as a compact JSON envelope (key fields + typed payload), the
-    MQ-sink wire format (cdc/sink/codec/json.go). String/long fields only so
-    the encoding is byte-identical across engines."""
-    feed = events_as_changefeed(spark, sf_dir)
-    enc = feed.select(
-        "event_id",
-        F.to_json(
-            F.struct(
-                F.col("user_id").alias("u"),
-                F.col("commit_ts").alias("ts"),
-                F.col("op").alias("o"),
-                F.col("event_type").alias("t"),
-            )
-        ).alias("envelope"),
-    )
-    return enc.select(
-        "event_id", "envelope", F.md5("envelope").alias("envelope_md5")
-    )
-
-
 def cdc_cyclic_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cyclic-replication filter (F6, pkg/cyclic/filter.go:44-110): a mark
     table (one row per txn start_ts, carrying the origin replica) is
@@ -408,211 +388,100 @@ def cdc_validate_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cdc_encode_maxwell(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maxwell-style sink codec (K5, cdc/sink/codec/maxwell.go): the
-    database/table/type/ts envelope with a nested ``data`` payload, encoded
-    as compact JSON — same wire shape as Maxwell's Kafka messages."""
+# ------------------------------------------------------- MQ wires (K4, K5)
+# Each wire query applies the MQ sink's own envelope (sinks/mq.py) to the
+# same change-event projection of ``events``, so the DuckDB oracles
+# byte-check the bytes the sink publishes.
+
+
+def events_as_change_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` changefeed in the MQ sink's change-event columns, plus
+    ``event_id`` as the result key: key (conv_id, turn_idx) = (user_id, 0),
+    source table = event_type, payload JSON written by string
+    concatenation (the oracle concatenates the same text). Deletes carry no
+    payload; updates and deletes carry a ``user_id``-only pre-image, so the
+    wires' before-image and null-field branches are exercised."""
     feed = events_as_changefeed(spark, sf_dir)
-    op_name = (
-        F.when(F.col("op") == "I", "insert")
-        .when(F.col("op") == "D", "delete")
-        .otherwise("update")
+    uid = F.col("user_id").cast("string")
+    payload = F.concat(
+        F.lit('{"user_id":'), uid,
+        F.lit(',"event_type":"'), F.col("event_type"), F.lit('"}'),
     )
-    enc = feed.select(
-        "event_id",
-        F.to_json(
-            F.struct(
-                F.lit("app").alias("database"),
-                F.col("event_type").alias("table"),
-                op_name.alias("type"),
-                F.col("commit_ts").alias("ts"),
-                F.struct(
-                    F.col("user_id").alias("user_id"),
-                    F.col("event_id").alias("event_id"),
-                ).alias("data"),
-            )
-        ).alias("envelope"),
+    pre = F.concat(F.lit('{"user_id":'), uid, F.lit("}"))
+    return feed.select(
+        "event_id", "seq", "op", "commit_ts", "start_ts",
+        F.lit(1).alias("schema_version"),
+        uid.alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.when(F.col("op") != "D", payload).alias("payload"),
+        F.when(F.col("op") != "I", pre).alias("pre_payload"),
+        F.col("event_type").alias("tbl"),
     )
-    return enc.select("event_id", "envelope", F.md5("envelope").alias("envelope_md5"))
+
+
+def _encode(spark: SparkSession, sf_dir: str, envelope) -> DataFrame:
+    """One sink envelope over the change events: key, envelope, its md5."""
+    enc = mq.with_envelope(events_as_change_events(spark, sf_dir), envelope)
+    return enc.select(
+        "event_id", "envelope", F.md5("envelope").alias("envelope_md5")
+    )
+
+
+def cdc_encode_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Open-protocol JSON codec (K5, cdc/sink/codec/json.go): the MQ
+    changefeed's default envelope."""
+    return _encode(spark, sf_dir, mq.open_json_envelope())
+
+
+def cdc_encode_maxwell(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maxwell codec (K5, cdc/sink/codec/maxwell.go): database/table/type/ts
+    envelope with the row under ``data`` and the old image under ``old``."""
+    return _encode(spark, sf_dir, mq.maxwell_envelope())
 
 
 def cdc_encode_canal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canal-flat sink codec (K5, cdc/sink/codec/canal_flat.go): the
-    flat-message envelope — UPPER-CASE type, ``pkNames`` list, ``data`` as a
-    one-element array of row objects — as compact JSON."""
-    feed = events_as_changefeed(spark, sf_dir)
-    op_name = (
-        F.when(F.col("op") == "I", "INSERT")
-        .when(F.col("op") == "D", "DELETE")
-        .otherwise("UPDATE")
+    """Canal-flat JSON codec (K5, cdc/sink/codec/canal_flat.go): the flat
+    message with ``data``/``old`` as one-element arrays."""
+    return _encode(spark, sf_dir, mq.canal_json_envelope())
+
+
+def cdc_encode_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Avro + schema-registry codec (K5, cdc/sink/codec/avro.go:75,119,184):
+    the Confluent wire under a one-version registry whose payload record
+    has an integral ``user_id`` (Avro long) and a string ``event_type``
+    field, registered exactly as the MQ changefeed registers its writer
+    schemas."""
+    registry = SchemaRegistry.initial(
+        [(1, "user_id", "bigint", None), (2, "event_type", "string", None)]
     )
-    enc = feed.select(
-        "event_id",
-        F.to_json(
-            F.struct(
-                F.lit("app").alias("database"),
-                F.col("event_type").alias("table"),
-                F.array(F.lit("user_id")).alias("pkNames"),
-                F.lit(False).alias("isDdl"),
-                op_name.alias("type"),
-                F.col("commit_ts").alias("es"),
-                F.array(
-                    F.struct(
-                        F.col("user_id").alias("user_id"),
-                        F.round(F.col("value") * 1000).cast("long").alias("value_milli"),
-                    )
-                ).alias("data"),
-            )
-        ).alias("envelope"),
-    )
-    return enc.select("event_id", "envelope", F.md5("envelope").alias("envelope_md5"))
+    ids: dict = {}
+    mq.register_avro_schemas(registry, ids, {})
+    return _encode(spark, sf_dir, mq.avro_envelope_versioned(registry, ids))
 
 
-def _zigzag_hex(v, septets: int = 9):
-    """Craft/protobuf zigzag varint of a possibly-negative long, as hex
-    (domain |v| < 2^62 — the zigzag doubling must fit a signed long)."""
-    return _varint_hex(F.when(v >= 0, v * 2).otherwise(-v * 2 - 1), septets)
-
-
-def _uvarint_rev_hex(v, septets: int = 9):
-    """Craft's reversed uvarint (craft/encoder.go:59-75): the same varint
-    bytes emitted highest-septet first, so a reader can parse it BACKWARD
-    from the end of the message to locate the size tables."""
-    parts = []
-    for i in reversed(range(septets)):
-        sept = F.shiftright(v, 7 * i).bitwiseAND(F.lit(0x7F))
-        more = F.shiftright(v, 7 * (i + 1)) > 0
-        byte = sept + F.when(more, F.lit(0x80)).otherwise(F.lit(0))
-        present = F.lit(i == 0) | (v >= F.lit(1 << (7 * i)))
-        parts.append(F.when(present, _hex_byte(byte)).otherwise(F.lit("")))
-    return F.concat(*parts)
-
-
-def _hexlen(h):
-    """Byte length of a hex-string column."""
-    return (F.length(h) / 2).cast("long")
+def cdc_encode_canal_pb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canal protobuf codec (K5, cdc/sink/codec/canal.go:75-240): the
+    length-framed EntryProtocol.proto Entry with Header and RowData
+    before/after Column messages."""
+    return _encode(spark, sf_dir, mq.canal_pb_envelope())
 
 
 def cdc_encode_craft(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Craft sink codec analogue (K5, cdc/sink/codec/craft.go +
-    craft/encoder.go:36-183, craft/model.go): TiCDC's columnar binary
-    format rebuilt from its public wire primitives — version uvarint,
-    header chunk, column group (group-type byte, column count, term-dict
-    name refs as a delta zigzag-varint chunk, mysql type bytes,
-    length-prefixed value chunk), the term dictionary, delta-varint size
-    tables, and the reversed-uvarint trailer that lets a reader locate the
-    size tables from the message tail. One row per message (the reference
-    batches rows; the per-row layout is identical). Emitted as hex from
-    pure JVM expressions; the DuckDB oracle recomputes every byte and
-    ``test_craft_wire_round_trips`` parses it back tail-first like the
-    reference decoder."""
-    feed = events_as_changefeed(spark, sf_dir)
-    op = F.col("op")
-    etype = F.when(op == "I", 1).when(op == "D", 3).otherwise(2).cast("long")
-    vm = F.round(F.col("value") * 1000).cast("long")
-    uid = F.col("user_id").cast("long")
-
-    # header: event count, commit_ts / type uvarint chunks, then term-dict
-    # refs for schema ("app"=0) and table (event_type=1) as zigzag varints
-    header = F.concat(
-        _varint_hex(F.lit(1).cast("long"), septets=5),  # event count
-        _varint_hex(F.col("commit_ts")),
-        _varint_hex(etype, septets=5),
-        _zigzag_hex(F.lit(0).cast("long"), septets=5),  # schema dict ref
-        _zigzag_hex(F.lit(1).cast("long"), septets=5),  # table dict ref
-    )
-    # column group: 0x01 = "new values" group (craft/model.go:31), 2 cols,
-    # name refs as a DELTA zigzag chunk (2, then 3-2), TypeLongLong bytes,
-    # values as a length-prefixed chunk (lengths first, then bytes — the
-    # craft chunk convention, encoder.go:90-98)
-    v0 = _zigzag_hex(uid)
-    v1 = _zigzag_hex(vm)
-    body = F.concat(
-        F.lit("01"),
-        _varint_hex(F.lit(2).cast("long"), septets=5),
-        _zigzag_hex(F.lit(2).cast("long"), septets=5),
-        _zigzag_hex(F.lit(1).cast("long"), septets=5),  # delta to ref 3
-        F.lit("0808"),                               # mysql TypeLongLong x2
-        _varint_hex(_hexlen(v0), septets=5),
-        _varint_hex(_hexlen(v1), septets=5),
-        v0,
-        v1,
-    )
-    # term dictionary, first-use order: app, <table>, user_id, value_milli
-    # (string chunk: all lengths, then all bytes)
-    tbl = F.col("event_type")
-    dict_hex = F.concat(
-        _varint_hex(F.lit(4).cast("long"), septets=5),
-        _varint_hex(F.lit(3).cast("long"), septets=5),
-        _varint_hex(F.octet_length(tbl).cast("long"), septets=5),
-        _varint_hex(F.lit(7).cast("long"), septets=5),
-        _varint_hex(F.lit(11).cast("long"), septets=5),
-        F.lower(F.hex(F.lit("app"))),
-        F.lower(F.hex(tbl)),
-        F.lower(F.hex(F.lit("user_id"))),
-        F.lower(F.hex(F.lit("value_milli"))),
-    )
-    # size tables (encoder.go:177-185): meta [header, dict], body sizes,
-    # column-group sizes — each uvarint(len) + delta zigzag chunk — then
-    # the reversed-uvarint byte length of the tables themselves.
-    # STAGED through selects: the size tables reference the byte lengths of
-    # header/body/dict, and the trailer references the length of the tables
-    # expression itself — inlining those would duplicate each subtree into
-    # every varint septet (5× per reference) and the final plan blows up
-    # exponentially (observed: codegen OOM).  Materializing each part as a
-    # projected column keeps every subtree single-copy; Catalyst's
-    # CollapseProject declines to re-inline multi-referenced non-cheap
-    # aliases, so the staged shape survives optimization.
-    parts = feed.select(
-        "event_id",
-        header.alias("header_hex"),
-        body.alias("body_hex"),
-        dict_hex.alias("dict_hex"),
-    )
-    hlen = _hexlen(F.col("header_hex"))
-    blen = _hexlen(F.col("body_hex"))
-    dlen = _hexlen(F.col("dict_hex"))
-    staged = parts.select(
-        "*",
-        F.concat(
-            _varint_hex(F.lit(2).cast("long"), septets=5),
-            _zigzag_hex(hlen, septets=5), _zigzag_hex(dlen - hlen, septets=5),
-            _varint_hex(F.lit(1).cast("long"), septets=5), _zigzag_hex(blen, septets=5),
-            _varint_hex(F.lit(1).cast("long"), septets=5), _zigzag_hex(blen, septets=5),
-        ).alias("tables_hex"),
-    )
-    wire = F.concat(
-        F.lit("01"),  # craft Version1
-        F.col("header_hex"), F.col("body_hex"), F.col("dict_hex"),
-        F.col("tables_hex"), _uvarint_rev_hex(_hexlen(F.col("tables_hex")), septets=5),
-    )
-    return staged.select(
-        "event_id", wire.alias("wire_hex")
-    ).withColumn("wire_md5", F.md5("wire_hex"))
+    """Craft codec (K5, cdc/sink/codec/craft.go + craft/encoder.go:36-183):
+    the columnar wire with term dictionary, size tables and the
+    reversed-uvarint trailer."""
+    return _encode(spark, sf_dir, mq.craft_envelope())
 
 
 def cdc_mq_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MQ sink dispatch (K4, cdc/sink/mq.go:55-220 +
-    dispatcher/partition/index_value.go:36-56): every event routed to its
-    topic partition by a portable key hash, with a dense per-partition
-    offset in canonical order — the exact (partition, offset, payload)
-    stream a Kafka producer would emit."""
-    from tiflow_spark.sinks.mq import mq_dispatch
-
-    feed = events_as_changefeed(spark, sf_dir)
-    enc = feed.withColumn(
-        "envelope",
-        F.to_json(
-            F.struct(
-                F.col("user_id").alias("u"),
-                F.col("commit_ts").alias("ts"),
-                F.col("op").alias("o"),
-            )
-        ),
-    )
-    from tiflow_spark.model import event_order_cols
-
-    d = mq_dispatch(enc, ["user_id"], 8)
+    dispatcher/partition/index_value.go:36-56): every open-json envelope
+    routed to one of 8 partitions by the sink's portable key hash, with a
+    dense per-partition offset in canonical order — the exact (partition,
+    offset, payload) stream a Kafka producer would emit."""
+    enc = mq.with_envelope(events_as_change_events(spark, sf_dir),
+                           mq.open_json_envelope())
+    d = mq.mq_dispatch(enc, ["conv_id", "turn_idx"], 8)
     w = Window.partitionBy("partition").orderBy(*event_order_cols())
     return d.select(
         "partition",
@@ -620,133 +489,6 @@ def cdc_mq_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "envelope",
         F.md5("envelope").alias("envelope_md5"),
     )
-
-
-AVRO_SCHEMA_JSON = (
-    '{"type":"record","name":"events","fields":['
-    '{"name":"user_id","type":"long"},{"name":"commit_ts","type":"long"},'
-    '{"name":"op","type":"string"},{"name":"event_type","type":"string"}]}'
-)
-
-
-def _hex_byte(b):
-    return F.lower(F.lpad(F.hex(b), 2, "0"))
-
-
-def _varint_hex(v, septets: int = 9):
-    """Avro/protobuf base-128 varint of a nonnegative long, as a lowercase
-    hex string — unrolled to ``septets`` septets (9 = 63 bits, the full
-    nonnegative int64 domain; real TiDB TSOs are ~2^59, so a narrower
-    unroll silently corrupts the wire), pure codegen arithmetic. Bounded
-    values (byte lengths, dict refs) pass septets=5 to keep plans lean."""
-    parts = []
-    for i in range(septets):
-        sept = F.shiftright(v, 7 * i).bitwiseAND(F.lit(0x7F))
-        more = F.shiftright(v, 7 * (i + 1)) > 0
-        byte = sept + F.when(more, F.lit(0x80)).otherwise(F.lit(0))
-        present = F.lit(i == 0) | (v >= F.lit(1 << (7 * i)))
-        parts.append(F.when(present, _hex_byte(byte)).otherwise(F.lit("")))
-    return F.concat(*parts)
-
-
-def cdc_encode_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro + schema-registry sink analogue (K5, cdc/sink/codec/avro.go:75,
-    119,184): the Confluent wire format — magic byte 0x00, 4-byte schema id
-    (from a registry row whose fingerprint is md5 of the canonical schema
-    JSON), then the record's true Avro BINARY body: zigzag-varint longs and
-    varint-length-prefixed UTF-8 strings, fields in schema order. Emitted as
-    a hex string so an independent engine byte-checks it; every byte comes
-    from JVM-side integer/hex expressions (no UDF, no avro lib)."""
-    feed = events_as_changefeed(spark, sf_dir)
-    registry = spark.createDataFrame(
-        [(1, "events-value", 1)], "schema_id int, subject string, version int"
-    ).withColumn("fingerprint", F.md5(F.lit(AVRO_SCHEMA_JSON)))
-    # zigzag(n) = 2n for nonnegative n (ids/ts/lengths are all nonnegative)
-    body = F.concat(
-        _varint_hex(F.col("user_id") * 2),
-        _varint_hex(F.col("commit_ts") * 2),
-        _varint_hex(F.octet_length("op").cast("long") * 2, septets=5),
-        F.lower(F.hex("op")),
-        _varint_hex(F.octet_length("event_type").cast("long") * 2, septets=5),
-        F.lower(F.hex("event_type")),
-    )
-    enc = feed.crossJoin(F.broadcast(registry)).select(
-        "event_id",
-        "schema_id",
-        "fingerprint",
-        F.concat(
-            F.lit("00"), F.lower(F.lpad(F.hex("schema_id"), 8, "0")), body
-        ).alias("wire_hex"),
-    )
-    return enc.withColumn("wire_md5", F.md5("wire_hex"))
-
-
-def _pb_str_field(tag_byte: int, col):
-    """Protobuf length-delimited string field as hex: 1-byte tag
-    ((field_no << 3) | 2), varint BYTE length (octet_length — a char count
-    corrupts the wire for multi-byte UTF-8), UTF-8 bytes."""
-    return F.concat(
-        F.lit(f"{tag_byte:02x}"),
-        _varint_hex(F.octet_length(col).cast("long"), septets=5),
-        F.lower(F.hex(col)),
-    )
-
-
-def _pb_msg_field(tag_byte: int, body_hex):
-    """Protobuf embedded-message field as hex: tag, varint of the nested
-    message's BYTE length (hex chars / 2), then the nested bytes."""
-    return F.concat(
-        F.lit(f"{tag_byte:02x}"),
-        _varint_hex((F.length(body_hex) / 2).cast("long"), septets=5),
-        body_hex,
-    )
-
-
-def cdc_encode_canal_pb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canal protobuf sink codec analogue (K5, cdc/sink/codec/canal.go:
-    75-240 buildHeader/buildRowChange over EntryProtocol.proto): a real
-    protobuf wire message — Header{schemaName, tableName, executeTime,
-    eventType-enum} as an embedded message, isDdl varint, repeated
-    Column{index, name, value} embedded messages — framed with the packet's
-    varint length prefix, exactly the tag/varint/length-delimited encoding
-    protoc would emit for this shape. Emitted as hex so an independent
-    engine byte-checks it; every byte from JVM-side expressions (no UDF,
-    no protobuf lib)."""
-    feed = events_as_changefeed(spark, sf_dir)
-    op = F.col("op")
-    # canal EventType enum: INSERT=1, UPDATE=2, DELETE=3
-    etype = F.when(op == "I", 1).when(op == "D", 3).otherwise(2).cast("long")
-    header = F.concat(
-        _pb_str_field(0x0A, F.lit("app")),                      # f1 schemaName
-        _pb_str_field(0x12, F.col("event_type")),               # f2 tableName
-        F.lit("18"), _varint_hex(F.col("commit_ts")),           # f3 executeTime
-        F.lit("20"), _varint_hex(etype, septets=5),             # f4 eventType
-    )
-    col0 = F.concat(
-        F.lit("08"), _varint_hex(F.lit(0).cast("long"), septets=5),  # f1 index
-        _pb_str_field(0x12, F.lit("user_id")),                  # f2 name
-        _pb_str_field(0x1A, F.col("user_id").cast("string")),   # f3 value
-    )
-    col1 = F.concat(
-        F.lit("08"), _varint_hex(F.lit(1).cast("long"), septets=5),
-        _pb_str_field(0x12, F.lit("value_milli")),
-        _pb_str_field(
-            0x1A, F.round(F.col("value") * 1000).cast("long").cast("string")
-        ),
-    )
-    entry = F.concat(
-        _pb_msg_field(0x0A, header),                            # f1 header
-        F.lit("1000"),                                          # f2 isDdl=false
-        _pb_msg_field(0x1A, col0),                              # f3 columns
-        _pb_msg_field(0x1A, col1),
-    )
-    enc = feed.select(
-        "event_id",
-        F.concat(
-            _varint_hex((F.length(entry) / 2).cast("long"), septets=5), entry
-        ).alias("wire_hex"),
-    )
-    return enc.withColumn("wire_md5", F.md5("wire_hex"))
 
 
 def cdc_batch_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:

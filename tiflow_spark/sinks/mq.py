@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -184,6 +186,86 @@ class FileMQSink:
         ).option("basePath", self.path).json(os.path.join(self.path, "epoch=*"))
 
 
+# ---------------------------------------------------------------- codecs
+# Every wire's bytes are built here, once: the MQ changefeed publishes these
+# envelopes and the catalog's cdc_encode_* queries apply the same functions
+# (the DuckDB oracles byte-check them). The binary wires are lowercase hex
+# strings on the JSON-lines file topic; a Kafka sink publishes
+# ``unhex(value)``.
+
+
+def _hex_byte(b):
+    return F.lower(F.lpad(F.hex(b), 2, "0"))
+
+
+def _septet_hex(v, i: int):
+    """Byte ``i`` of the base-128 varint of ``v`` as hex, or '' once ``v``
+    has no septet ``i`` (the continuation bit set on every byte but the
+    last)."""
+    sept = F.shiftright(v, 7 * i).bitwiseAND(F.lit(0x7F))
+    more = F.shiftright(v, 7 * (i + 1)) > 0
+    byte = sept + F.when(more, F.lit(0x80)).otherwise(F.lit(0))
+    present = F.lit(i == 0) | (v >= F.lit(1 << (7 * i)))
+    return F.when(present, _hex_byte(byte)).otherwise(F.lit(""))
+
+
+def _varint_hex(v, septets: int = 9):
+    """Avro/protobuf base-128 varint of a nonnegative long, as a lowercase
+    hex string — unrolled to ``septets`` septets (9 = 63 bits, the full
+    nonnegative int64 domain; real TiDB TSOs are ~2^59, so a narrower
+    unroll silently corrupts the wire), pure codegen arithmetic. Bounded
+    values (byte lengths, dict refs) pass septets=5 to keep plans lean."""
+    return F.concat(*[_septet_hex(v, i) for i in range(septets)])
+
+
+def _zigzag_hex(v, septets: int = 9):
+    """Craft/protobuf/Avro zigzag varint of a possibly-negative long, as hex
+    (domain |v| < 2^62 — the zigzag doubling must fit a signed long)."""
+    return _varint_hex(F.when(v >= 0, v * 2).otherwise(-v * 2 - 1), septets)
+
+
+def _uvarint_rev_hex(v, septets: int = 9):
+    """Craft's reversed uvarint (craft/encoder.go:59-75): the same varint
+    bytes emitted highest-septet first, so a reader can parse it BACKWARD
+    from the end of the message to locate the size tables."""
+    return F.concat(*[_septet_hex(v, i) for i in reversed(range(septets))])
+
+
+def _hexlen(h):
+    """Byte length of a hex-string column."""
+    return (F.length(h) / 2).cast("long")
+
+
+def _pb_str_field(tag_byte: int, col):
+    """Protobuf length-delimited string field as hex: 1-byte tag
+    ((field_no << 3) | 2), varint BYTE length (octet_length — a char count
+    corrupts the wire for multi-byte UTF-8), UTF-8 bytes."""
+    return F.concat(
+        F.lit(f"{tag_byte:02x}"),
+        _varint_hex(F.octet_length(col).cast("long"), septets=5),
+        F.lower(F.hex(col)),
+    )
+
+
+def _pb_msg_field(tag_byte: int, body_hex):
+    """Protobuf embedded-message field as hex: tag, varint of the nested
+    message's BYTE length, then the nested bytes."""
+    return F.concat(
+        F.lit(f"{tag_byte:02x}"), _varint_hex(_hexlen(body_hex), septets=5),
+        body_hex,
+    )
+
+
+def with_envelope(df: DataFrame, envelope) -> DataFrame:
+    """``df`` plus the codec's ``envelope`` column. A codec is either a
+    Column (single envelope expression) or a DataFrame transformer (staged
+    construction for deep wire formats whose one-expression form blows up
+    the plan)."""
+    if isinstance(envelope, Column):
+        return df.withColumn("envelope", envelope)
+    return envelope(df)
+
+
 def open_json_envelope() -> "F.Column":
     """Default codec for the MQ changefeed: TiCDC open-protocol-style JSON
     envelope over the raw event columns (cdc/sink/codec/json.go shape —
@@ -254,70 +336,6 @@ def canal_json_envelope(database: str = "app", table: str = "transcripts"):
                 F.array(F.struct(F.col("pre_payload").alias("payload"))),
             ).alias("old"),
         )
-    )
-
-
-AVRO_ROW_SCHEMA_JSON = (
-    '{"type":"record","name":"RowChange","fields":['
-    '{"name":"seq","type":"long"},'
-    '{"name":"op","type":"string"},'
-    '{"name":"commit_ts","type":"long"},'
-    '{"name":"start_ts","type":["null","long"]},'
-    '{"name":"schema_version","type":["null","long"]},'
-    '{"name":"conv_id","type":"string"},'
-    '{"name":"turn_idx","type":"long"},'
-    '{"name":"payload","type":["null","string"]},'
-    '{"name":"pre_payload","type":["null","string"]},'
-    '{"name":"tbl","type":["null","string"]}]}'
-)
-AVRO_ROW_SCHEMA_ID = 1
-
-
-def avro_envelope(schema_id: int = AVRO_ROW_SCHEMA_ID) -> "F.Column":
-    """Avro + Confluent-schema-registry wire envelope over the full change
-    event (cdc/sink/codec/avro.go:75,119,184): magic byte 0x00, 4-byte
-    big-endian schema id, then the record's true Avro binary body — zigzag
-    varint longs, varint-length-prefixed UTF-8 strings, nullable fields as
-    ["null", T] unions with a varint branch index — all built from JVM-side
-    integer/hex expressions (no UDF, no avro lib). Emitted as a lowercase
-    hex string because the file topic is JSON-lines; a Kafka sink would
-    publish ``unhex(value)``."""
-    from tiflow_spark.queries import _varint_hex, _zigzag_hex
-
-    def _lng(c):
-        return _zigzag_hex(c.cast("long"))
-
-    def _str(c):
-        # Avro string: byte length as a (zigzag) long, then UTF-8 bytes
-        return F.concat(
-            _varint_hex(F.octet_length(c).cast("long") * 2, septets=5),
-            F.lower(F.hex(c)),
-        )
-
-    def _opt(name, enc):
-        # union ["null", T]: branch index as a zigzag long — 0x00 for null,
-        # 0x02 (zigzag(1)) then the value for the T branch
-        c = F.col(name)
-        return F.when(c.isNull(), F.lit("00")).otherwise(
-            F.concat(F.lit("02"), enc(c))
-        )
-
-    body = F.concat(
-        _lng(F.col("seq")),
-        _str(F.col("op")),
-        _lng(F.col("commit_ts")),
-        _opt("start_ts", _lng),
-        _opt("schema_version", _lng),
-        _str(F.col("conv_id")),
-        _lng(F.col("turn_idx")),
-        _opt("payload", _str),
-        _opt("pre_payload", _str),
-        _opt("tbl", _str),
-    )
-    return F.concat(
-        F.lit("00"),
-        F.lower(F.lpad(F.hex(F.lit(schema_id)), 8, "0")),
-        body,
     )
 
 
@@ -394,8 +412,12 @@ def avro_envelope_versioned(registry, id_by_version: dict):
     schema of its RESOLVED registry version — the Confluent header carries
     that version's registered schema id, and ``payload``/``pre_payload`` are
     that version's typed nested Avro record (integral fields as zigzag-varint
-    longs, the rest as varint-length strings) instead of one frozen
-    JSON-string schema. No explicit schema_version field rides the wire: the
+    longs, the rest as varint-length strings). This is the only Avro wire:
+    body bytes are zigzag varint longs, varint-length-prefixed UTF-8 strings
+    and ["null", T] unions with a varint branch index, built from JVM-side
+    integer/hex expressions (no UDF, no avro lib), behind the Confluent
+    framing of magic byte 0x00 and a 4-byte big-endian schema id. No
+    explicit schema_version field rides the wire: the
     schema id IS the version pointer, exactly the reference's contract (a
     consumer fetches the writer schema by id); the relay decoder recovers the
     version from the manifest's id map when unambiguous and otherwise falls
@@ -415,7 +437,6 @@ def avro_envelope_versioned(registry, id_by_version: dict):
     applies: that stage falls back to per-expression codegen (split
     methods, still JVM-compiled, just unfused) — never to Python."""
     from tiflow_spark.engine import schema_version_expr
-    from tiflow_spark.queries import _varint_hex, _zigzag_hex
 
     def _lng(c):
         return _zigzag_hex(c.cast("long"))
@@ -524,7 +545,6 @@ def canal_pb_envelope(database: str = "app", table: str = "transcripts"):
     this wire's 3-level nesting. Staging each level as a named column keeps
     every tree one level deep (Catalyst does not re-inline multi-referenced
     non-cheap projections)."""
-    from tiflow_spark.queries import _pb_msg_field, _pb_str_field, _varint_hex
 
     def _col_msg(idx: int, name: str, value, parent_tag: int):
         # Column message under RowData field `parent_tag`; a NULL value
@@ -588,7 +608,7 @@ def canal_pb_envelope(database: str = "app", table: str = "transcripts"):
         return staged.withColumn(
             "envelope",
             F.concat(
-                _varint_hex((F.length("_pb_entry") / 2).cast("long")),
+                _varint_hex(_hexlen("_pb_entry")),
                 F.col("_pb_entry"),
             ),
         ).drop("_pb_hdr", "_pb_row", "_pb_entry")
@@ -605,16 +625,15 @@ def craft_envelope(database: str = "app", table: str = "transcripts"):
     length-prefixed value chunk), the term dictionary, the delta-varint
     size tables, and the reversed-uvarint trailer a reader parses BACKWARD
     from the message tail. Batch-of-1 per message (the reference batches
-    rows; the per-row layout is identical — same stance as
-    cdc_encode_craft). Nulls carry a mask bit + zero length; the old-values
-    group is always present (empty under the mask) so the size tables have
-    a fixed shape. No seq/start_ts/schema_version on the wire — the relay
-    synthesizes seq from partition offsets (maxwell rule).
+    rows; the per-row layout is identical). Nulls carry a mask bit + zero
+    length; the old-values group is always present (empty under the mask)
+    so the size tables have a fixed shape. No seq/start_ts/schema_version
+    on the wire — the relay synthesizes seq from partition offsets
+    (maxwell rule).
 
     Returns a staged DataFrame transformer (see canal_pb_envelope: the
     nested length prefixes re-reference their bodies, so each layer is a
     named column)."""
-    from tiflow_spark.queries import _varint_hex, _zigzag_hex
 
     def apply(df: DataFrame) -> DataFrame:
         op = F.col("op")
@@ -635,7 +654,6 @@ def craft_envelope(database: str = "app", table: str = "transcripts"):
         pre_hex = F.coalesce(F.lower(F.hex("pre_payload")), F.lit(""))
         null1 = F.when(F.col("payload").isNull(), F.lit("04")).otherwise(F.lit("00"))
         null2 = F.when(F.col("pre_payload").isNull(), F.lit("01")).otherwise(F.lit("00"))
-        hexlen = lambda h: (F.length(h) / 2).cast("long")
         g1 = F.concat(
             F.lit("01"),                             # group: new values
             _varint_hex(F.lit(3).cast("long"), septets=5),   # 3 columns
@@ -644,9 +662,9 @@ def craft_envelope(database: str = "app", table: str = "transcripts"):
             _zigzag_hex(F.lit(1).cast("long"), septets=5),   # +1 -> payload
             F.lit("0f080f"),                         # VARCHAR, LONGLONG, VARCHAR
             null1,                                   # null mask (bit2=payload)
-            _varint_hex(hexlen(conv_hex), septets=5),
-            _varint_hex(hexlen(turn_hex), septets=5),
-            _varint_hex(hexlen(pay_hex), septets=5),
+            _varint_hex(_hexlen(conv_hex), septets=5),
+            _varint_hex(_hexlen(turn_hex), septets=5),
+            _varint_hex(_hexlen(pay_hex), septets=5),
             conv_hex, turn_hex, pay_hex,
         )
         g2 = F.concat(
@@ -655,7 +673,7 @@ def craft_envelope(database: str = "app", table: str = "transcripts"):
             _zigzag_hex(F.lit(4).cast("long"), septets=5),   # payload dict ref
             F.lit("0f"),
             null2,
-            _varint_hex(hexlen(pre_hex), septets=5),
+            _varint_hex(_hexlen(pre_hex), septets=5),
             pre_hex,
         )
         dict_hex = F.concat(
@@ -686,37 +704,37 @@ def craft_envelope(database: str = "app", table: str = "transcripts"):
             "_cr_tables",
             F.concat(
                 _varint_hex(F.lit(2).cast("long"), septets=5),  # meta sizes
-                _zigzag_hex(hexlen(F.col("_cr_hdr")), septets=5),
-                _zigzag_hex(hexlen(F.col("_cr_dict")) - hexlen(F.col("_cr_hdr")),
+                _zigzag_hex(_hexlen(F.col("_cr_hdr")), septets=5),
+                _zigzag_hex(_hexlen(F.col("_cr_dict")) - _hexlen(F.col("_cr_hdr")),
                             septets=5),
                 _varint_hex(F.lit(1).cast("long"), septets=5),  # body size
-                _zigzag_hex(hexlen(F.col("_cr_g1")) + hexlen(F.col("_cr_g2")),
+                _zigzag_hex(_hexlen(F.col("_cr_g1")) + _hexlen(F.col("_cr_g2")),
                             septets=5),
                 _varint_hex(F.lit(2).cast("long"), septets=5),  # group sizes
-                _zigzag_hex(hexlen(F.col("_cr_g1")), septets=5),
-                _zigzag_hex(hexlen(F.col("_cr_g2")), septets=5),
+                _zigzag_hex(_hexlen(F.col("_cr_g1")), septets=5),
+                _zigzag_hex(_hexlen(F.col("_cr_g2")), septets=5),
             ),
         )
-        from tiflow_spark.queries import _uvarint_rev_hex
-
         return staged.withColumn(
             "envelope",
             F.concat(
                 F.lit("01"),                         # craft Version1
                 F.col("_cr_hdr"), F.col("_cr_g1"), F.col("_cr_g2"),
                 F.col("_cr_dict"), F.col("_cr_tables"),
-                _uvarint_rev_hex(hexlen(F.col("_cr_tables")), septets=5),
+                _uvarint_rev_hex(_hexlen(F.col("_cr_tables")), septets=5),
             ),
         ).drop("_cr_hdr", "_cr_g1", "_cr_g2", "_cr_dict", "_cr_tables")
 
     return apply
 
 
+# envelope factories by protocol name; avro's takes the topic's registry
+# and schema ids, which MQChangefeed restores from the topic manifest
 MQ_PROTOCOLS = {
     "open-json": open_json_envelope,
     "maxwell": maxwell_envelope,
     "canal-json": canal_json_envelope,
-    "avro": avro_envelope,
+    "avro": avro_envelope_versioned,
     "canal-pb": canal_pb_envelope,
     "craft": craft_envelope,
 }
@@ -813,13 +831,7 @@ class MQChangefeed(EpochDriver):
                 self.envelope if self.envelope is not None
                 else MQ_PROTOCOLS[self.protocol]()
             )
-        # a codec is either a Column (single envelope expression) or a
-        # DataFrame transformer (staged construction for deep wire
-        # formats whose one-expression form blows up the plan)
-        events = (
-            envelope(dml) if callable(envelope) and not isinstance(envelope, Column)
-            else dml.withColumn("envelope", envelope)
-        )
+        events = with_envelope(dml, envelope)
         epoch = state["epoch"] + 1
         published = self.sink.write_epoch(
             events, epoch=epoch, barrier_ts=plan.barrier_ts, ddl_rows=ddl_rows,
@@ -976,154 +988,43 @@ def _avro_read_opt(buf: bytes, pos: int, reader) -> tuple[object, int]:
     return reader(buf, pos)
 
 
-def _avro_parse_row(hexstr: str | bytes) -> tuple:
-    """Inverse of avro_envelope: Confluent wire (hex or raw bytes) →
-    change-event tuple (fields in RELAY column order; ddl/partition_hint
-    are not on the row wire)."""
-    buf = bytes.fromhex(hexstr) if isinstance(hexstr, str) else hexstr
-    if buf[0] != 0:
-        raise ValueError("not Confluent avro wire: bad magic byte")
-    schema_id = int.from_bytes(buf[1:5], "big")
-    if schema_id != AVRO_ROW_SCHEMA_ID:
-        raise ValueError(f"unknown avro schema id {schema_id}")
-    pos = 5
-    seq, pos = _avro_read_long(buf, pos)
-    op, pos = _avro_read_str(buf, pos)
-    commit_ts, pos = _avro_read_long(buf, pos)
-    start_ts, pos = _avro_read_opt(buf, pos, _avro_read_long)
-    schema_version, pos = _avro_read_opt(buf, pos, _avro_read_long)
-    conv_id, pos = _avro_read_str(buf, pos)
-    turn_idx, pos = _avro_read_long(buf, pos)
-    payload, pos = _avro_read_opt(buf, pos, _avro_read_str)
-    pre_payload, pos = _avro_read_opt(buf, pos, _avro_read_str)
-    tbl, pos = _avro_read_opt(buf, pos, _avro_read_str)
-    if pos != len(buf):
-        raise ValueError(f"avro trailing bytes: {len(buf) - pos}")
-    return (seq, op, commit_ts, start_ts, schema_version, conv_id,
-            turn_idx, payload, pre_payload, None, None, tbl)
-
-
 _RELAY_COLS = [
     "seq", "op", "commit_ts", "start_ts", "schema_version", "conv_id",
     "turn_idx", "payload", "pre_payload", "ddl", "partition_hint", "tbl",
 ]
 
 
-def _avro_read_value(schema, buf: bytes, pos: int, names: dict):
-    """Generic Avro-binary reader driven by the writer schema (what a real
-    consumer's avro lib does after fetching the schema by the wire's id,
-    schema_registry.go:274-299): unions pick a branch by zigzag index,
-    records walk fields in schema order and register their name for later
-    by-name references."""
-    if isinstance(schema, list):  # union
-        branch, pos = _avro_read_long(buf, pos)
-        sub = schema[branch]
-        if sub == "null":
-            return None, pos
-        return _avro_read_value(sub, buf, pos, names)
-    if isinstance(schema, str):
-        if schema in ("long", "int"):
-            return _avro_read_long(buf, pos)
-        if schema == "string":
-            return _avro_read_str(buf, pos)
-        if schema in names:  # named-type reference (pre_payload → "Row")
-            return _avro_read_value(names[schema], buf, pos, names)
-        raise ValueError(f"avro: unsupported type {schema!r}")
-    if isinstance(schema, dict) and schema.get("type") == "record":
-        names[schema["name"]] = schema
-        out = {}
-        for f in schema["fields"]:
-            out[f["name"]], pos = _avro_read_value(f["type"], buf, pos, names)
-        return out, pos
-    raise ValueError(f"avro: unsupported schema node {schema!r}")
-
-
-def _payload_json_from_record(row_schema: dict, values: dict) -> str:
-    """Reassemble the payload JSON text from a decoded Row record: string
-    fields re-quote (json escaping), integral fields print as numbers, other
-    sparkTypes splice their raw JSON lexeme back verbatim (falling back to a
-    quoted string if the lexeme isn't standalone-valid JSON)."""
-    parts = []
-    for f in row_schema.get("fields", []):
-        v = values.get(f["name"])
-        st = f.get("sparkType", "string")
-        if v is None:
-            txt = "null"
-        elif st in _AVRO_INTEGRAL_TYPES:
-            txt = str(v)
-        elif st == "string":
-            txt = json.dumps(v, ensure_ascii=False)
-        else:
-            try:
-                json.loads(v)
-                txt = v
-            except (ValueError, TypeError):
-                txt = json.dumps(v, ensure_ascii=False)
-        parts.append(json.dumps(f["name"]) + ":" + txt)
-    return "{" + ",".join(parts) + "}"
-
-
-def _avro_parse_versioned(hexstr: str | bytes, schemas_by_id: dict,
-                          ver_by_id: dict) -> tuple:
-    """Versioned-wire decode: the Confluent header's schema id selects the
-    WRITER schema (parsed, from the topic-manifest registry) and the generic
-    reader walks the body under it — pre- and post-DDL messages each decode
-    under their own schema. schema_version is recovered from the id map when
-    the id names exactly one registry version; otherwise (field-identical
-    versions sharing an id) it is left NULL and the as-of rule applies at
-    replay, like the maxwell/canal wires."""
-    buf = bytes.fromhex(hexstr) if isinstance(hexstr, str) else hexstr
-    if buf[0] != 0:
-        raise ValueError("not Confluent avro wire: bad magic byte")
-    sid = int.from_bytes(buf[1:5], "big")
-    schema = schemas_by_id.get(sid)
-    if schema is None:
-        if sid == AVRO_ROW_SCHEMA_ID:
-            # pre-registry topic: the legacy static wire carries payloads as
-            # opaque JSON strings and schema_version explicitly
-            return _avro_parse_row(hexstr)
-        raise ValueError(f"unknown avro schema id {sid}")
-    names: dict = {}
-    rec, pos = _avro_read_value(schema, buf, 5, names)
-    if pos != len(buf):
-        raise ValueError(f"avro trailing bytes: {len(buf) - pos}")
-    row_schema = names.get("Row", {"fields": []})
-    payload = (
-        _payload_json_from_record(row_schema, rec["payload"])
-        if rec["payload"] is not None else None
-    )
-    pre = (
-        _payload_json_from_record(row_schema, rec["pre_payload"])
-        if rec["pre_payload"] is not None else None
-    )
-    return (rec["seq"], rec["op"], rec["commit_ts"], rec["start_ts"],
-            ver_by_id.get(sid), rec["conv_id"], rec["turn_idx"],
-            payload, pre, None, None, rec["tbl"])
-
-
-def _compile_avro_reader(schema: dict, ver: int | None):
+def _compile_avro_reader(sid: int, schema: dict | None, ver: int | None):
     """Compile ONE writer schema into a specialized reader closure — the
     schema is interpreted once per schema id per task, not once per message
     (what a real avro lib's resolving decoder does when it caches the
-    compiled reader by schema id). Handles the canonical envelope shape
-    every ``avro_schema_json`` schema has; returns None for anything else so
-    the generic ``_avro_read_value`` walker stays the correctness fallback.
-    The payload JSON text is assembled inline from precomputed
-    ``"name":``-prefix parts, byte-identical to ``_payload_json_from_record``."""
+    compiled reader by schema id). Handles the envelope shape every
+    ``avro_schema_json`` schema has; a schema id missing from the topic
+    manifest, or registered with any other shape, raises ``ValueError``
+    naming the id — a message is never decoded under a schema it was not
+    written with. The payload JSON text is assembled inline from
+    precomputed ``"name":``-prefix parts."""
+    if schema is None:
+        raise ValueError(
+            f"avro schema id {sid} is not registered in the topic manifest"
+        )
+    shape_error = ValueError(
+        f"avro schema id {sid} is not a change-event writer schema"
+    )
     fields = schema.get("fields") if isinstance(schema, dict) else None
     expected = ["seq", "op", "commit_ts", "start_ts", "conv_id", "turn_idx",
                 "payload", "pre_payload", "tbl"]
     if not fields or [f["name"] for f in fields] != expected:
-        return None
+        raise shape_error
     row = fields[6]["type"][1] if isinstance(fields[6]["type"], list) else None
     if not (isinstance(row, dict) and row.get("type") == "record"):
-        return None
+        raise shape_error
     specs = []
     for f in row["fields"]:
         t = f["type"]
         if not (isinstance(t, list) and len(t) == 2 and t[0] == "null"
                 and t[1] in ("long", "string")):
-            return None
+            raise shape_error
         specs.append((json.dumps(f["name"]) + ":", t[1] == "long",
                       f.get("sparkType", "string")))
     rl, rs, ro = _avro_read_long, _avro_read_str, _avro_read_opt
@@ -1192,13 +1093,12 @@ def _batch_bufs(values) -> list[bytes]:
 
 
 def _decode_avro(row_msgs: DataFrame, state: dict | None = None) -> DataFrame:
-    """Inverse of the avro wires. Binary varint decode is not expressible as
-    column expressions (variable-length fields), so this is the one relay
-    decoder family that runs Python — Arrow-batched ``mapInPandas``, exactly
-    what a real consumer does with an avro lib. With a topic-manifest
-    registry (``avro_schemas``/``avro_ids``) each message decodes under its
-    own writer schema selected by the wire's schema id; without one the
-    legacy static wire's fixed walk applies."""
+    """Inverse of ``avro_envelope_versioned``. Binary varint decode is not
+    expressible as column expressions (variable-length fields), so the
+    binary relay decoders run Python — Arrow-batched ``mapInPandas``,
+    exactly what a real consumer does with an avro lib. Each message decodes
+    under its own writer schema, fetched by the wire's schema id from the
+    topic-manifest registry (``avro_schemas``/``avro_ids`` in ``state``)."""
     import pandas as pd
 
     st = state or {}
@@ -1223,12 +1123,8 @@ def _decode_avro(row_msgs: DataFrame, state: dict | None = None) -> DataFrame:
             sid = int.from_bytes(buf[1:5], "big")
             r = readers.get(sid)
             if r is None:
-                schema = schemas_by_id.get(sid)
-                r = schema and _compile_avro_reader(schema, ver_by_id.get(sid))
-                if not r:  # non-canonical schema or legacy static wire
-                    r = lambda b: _avro_parse_versioned(  # noqa: E731
-                        b, schemas_by_id, ver_by_id)
-                readers[sid] = r
+                r = readers[sid] = _compile_avro_reader(
+                    sid, schemas_by_id.get(sid), ver_by_id.get(sid))
             return r(buf)
 
         for pdf in batches:
@@ -1501,8 +1397,6 @@ def topic_to_log(spark: SparkSession, sink: FileMQSink, out_dir: str) -> str:
     ``from_json`` projection; the write is one narrow pass. The tiny ddl /
     checkpoint control sets are handled driver-side, as in the engine.
     """
-    import os as _os
-
     from tiflow_spark.model import CHANGE_EVENT_SCHEMA
 
     protocol = sink.topic_state().get("protocol") or "open-json"
@@ -1538,8 +1432,18 @@ def topic_to_log(spark: SparkSession, sink: FileMQSink, out_dir: str) -> str:
     # ONE decode pass: write the decoded rows, then validate and take
     # max(seq) from the WRITTEN parquet — a narrow two-column scan — instead
     # of running the (Python, for the binary wires) decode a second time
-    _os.makedirs(out_dir, exist_ok=True)
-    rows.write.mode("overwrite").parquet(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    try:
+        rows.write.mode("overwrite").parquet(out_dir)
+    except Exception as e:
+        # a binary decoder refused a message (unregistered avro schema id,
+        # bad framing): leave no half-built log and raise the decoder's own
+        # ValueError rather than the Spark job failure wrapping it
+        shutil.rmtree(out_dir, ignore_errors=True)
+        refused = re.search(r"ValueError: ([^\n]*)", str(e))
+        if refused:
+            raise ValueError(refused.group(1)) from e
+        raise
     agg = spark.read.parquet(out_dir).agg(
         F.max("seq").alias("max_seq"),
         F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("bad"),
@@ -1548,9 +1452,7 @@ def topic_to_log(spark: SparkSession, sink: FileMQSink, out_dir: str) -> str:
         # custom envelope or pre-protocol topic this schema can't decode —
         # fail loudly (and leave no half-built log) rather than relay a
         # silently-empty stream
-        import shutil as _shutil
-
-        _shutil.rmtree(out_dir, ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)
         raise ValueError(
             f"{agg['bad']} row messages did not decode as {protocol} "
             "envelopes (op is null) — wrong codec for this topic"
@@ -1572,8 +1474,8 @@ def topic_to_log(spark: SparkSession, sink: FileMQSink, out_dir: str) -> str:
     # then takes the same O(control-rows) fast path as a generated one
     # instead of full-scanning the log for its handful of control rows
     if extra:
-        ctl_dir = _os.path.join(out_dir, "_control")
-        _os.makedirs(ctl_dir, exist_ok=True)
+        ctl_dir = os.path.join(out_dir, "_control")
+        os.makedirs(ctl_dir, exist_ok=True)
         spark.createDataFrame(extra, CHANGE_EVENT_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(ctl_dir)
