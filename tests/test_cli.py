@@ -276,6 +276,92 @@ def test_config_validation_rejects_unknown_keys(tmp_path, feed):
         load_config(p3)
 
 
+_MQ = '[sink]\ntype = "mq"\n'
+_ROUTES = '[[routes]]\nsource = "*"\ntarget = "t"\n'
+
+
+@pytest.mark.parametrize("mode,name,toml", [
+    ("mq", "target-ts", "target-ts = 5000"),
+    ("mq", "syncpoint-every", "syncpoint-every = 100"),
+    ("mq", "start-ts", "start-ts = 10"),
+    ("mq", "base", 'base = "dump.parquet"'),
+    ("mq", "validate-state", "validate-state = true"),
+    ("mq", "validate-rows", "validate-rows = true"),
+    ("mq", "routes", _ROUTES),
+    ("multi-table", "bootstrap-chunk-files", "bootstrap-chunk-files = 2"),
+    ("multi-table", "target-ts", "target-ts = 5000"),
+    ("multi-table", "syncpoint-every", "syncpoint-every = 100"),
+])
+def test_load_config_refuses_options_a_mode_cannot_honour(tmp_path, mode, name, toml):
+    """Every (mode, option) pair a front end cannot honour is refused when
+    the config loads, naming the option — never silently ignored."""
+    from tiflow_spark.config import load_config
+
+    tables = _MQ if mode == "mq" else _ROUTES
+    head = f'log = "{tmp_path}"\ntarget = "{tmp_path / "t"}"\n'
+    p = str(tmp_path / "refused.toml")
+    with open(p, "w") as fh:  # the option first: it may be a top-level key
+        fh.write(f"{head}{toml}\n{tables}")
+    with pytest.raises(ValueError, match=f"{mode} changefeeds do not support: {name}"):
+        load_config(p)
+    with open(p, "w") as fh:  # the same config without it loads
+        fh.write(head + tables)
+    assert load_config(p).sink_type == ("mq" if mode == "mq" else "lake")
+
+
+def test_checkpoint_is_null_until_every_target_is_bootstrapped(feed, tmp_path, spark):
+    """The changefeed checkpoint is the min over ALL its targets: with one
+    of two routed tables bootstrapped, query, list and the engine all report
+    a null checkpoint (and list a null epoch), not the bootstrapped table's.
+    list applies the same rule to a topic nothing was published to yet."""
+    from tiflow_spark import lifecycle
+    from tiflow_spark.__main__ import main
+    from tiflow_spark.config import build_engine, load_config
+
+    f, _ = feed
+    cfg_dir = str(tmp_path / "feeds")
+    os.makedirs(cfg_dir)
+    cfg_path = os.path.join(cfg_dir, "two.toml")
+    with open(cfg_path, "w") as fh:
+        fh.write(f"""
+log = "{f.log_path}"
+target = "{tmp_path / 'two_targets'}"
+num-buckets = 2
+
+[[routes]]
+source = "transcripts"
+target = "alpha"
+
+[[routes]]
+source = "other_*"
+target = "beta"
+""")
+    engine = build_engine(load_config(cfg_path))
+    engine.bootstrap(spark, {"alpha": f.base_path}, start_ts=500)
+    assert engine.tables["alpha"].current_manifest()["checkpoint_ts"] == 500
+    assert engine.checkpoint_ts() is None
+
+    import contextlib
+    import io
+
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        assert main(["query", "--config", cfg_path]) == 0
+    status = json.loads(out.getvalue())
+    assert status["checkpoint_ts"] is None
+    assert status["tables"]["alpha"]["checkpoint_ts"] == 500
+    assert status["tables"]["beta"] == {"state": "not bootstrapped"}
+
+    with open(os.path.join(cfg_dir, "topic.toml"), "w") as fh:
+        fh.write(f'log = "{f.log_path}"\ntarget = "{tmp_path / "topic"}"\n'
+                 '[sink]\ntype = "mq"\n')
+    rows = lifecycle.list_changefeeds(cfg_dir)
+    assert [r["id"] for r in rows] == ["topic", "two"]
+    for row in rows:
+        assert row["checkpoint_ts"] is None and row["epoch"] is None
+        assert row["state"] == "not bootstrapped"
+
+
 def test_engine_filter_null_semantics(spark):
     """A drop-predicate that evaluates to NULL must KEEP the row (it did
     not match): deletes carry payload=NULL, so a payload predicate is NULL

@@ -97,8 +97,10 @@ def test_plan_epoch_nothing_outstanding_and_row_shape():
 
 def test_front_end_parity_one_barrier_schedule(spark, tmp_path):
     """At barrier_stride=1 the single-table engine, a one-route multi-table
-    engine and the MQ publisher commit the same barrier sequence and the
-    same final promise over one feed with a mid-stream ADD COLUMN."""
+    engine and the MQ publisher — all on the one inherited ``run`` — commit
+    the same barrier sequence and the same promises over one feed with a
+    mid-stream ADD COLUMN: first up to a ``target_ts`` no mark lands on,
+    then, resumed without one, to the end of the feed."""
     from tiflow_spark.engine import ChangefeedEngine, MultiTableEngine
     from tiflow_spark.lake import LakeTable
     from tiflow_spark.sinks.mq import FileMQSink, MQChangefeed
@@ -120,23 +122,31 @@ def test_front_end_parity_one_barrier_schedule(spark, tmp_path):
 
     single = ChangefeedEngine(log_dir, LakeTable(str(tmp_path / "s"), num_buckets=2))
     single.bootstrap(spark, base_fp)
-    s_ts = [e.barrier_ts for e in single.run(spark, barrier_stride=1).epochs]
-
     multi = MultiTableEngine(
         log_dir, {"transcripts": LakeTable(str(tmp_path / "m"), num_buckets=2)}
     )
     multi.bootstrap(spark, {"transcripts": base_dir})
-    m_ts = [e.barrier_ts
-            for e in multi.run(spark, barrier_stride=1)["transcripts"].epochs]
-
     sink = FileMQSink(str(tmp_path / "topic"), n_partitions=2)
-    q_ts = [e["barrier_ts"]
-            for e in MQChangefeed(log_dir, sink).run(spark, barrier_stride=1)]
+    front_ends = (single, multi, MQChangefeed(log_dir, sink))
 
-    assert s_ts == m_ts == q_ts == [110, 130, 140]
-    seqs = {
-        single.table.current_manifest()["checkpoint_seq"],
-        multi.tables["transcripts"].current_manifest()["checkpoint_seq"],
-        sink.topic_state()["checkpoint_seq"],
-    }
-    assert seqs == {7}
+    def schedules(target_ts):
+        return [
+            [e.barrier_ts for e in fe.run(
+                spark, barrier_stride=1, target_ts=target_ts).epochs]
+            for fe in front_ends
+        ]
+
+    def promises():
+        return {
+            single.table.current_manifest()["checkpoint_seq"],
+            multi.tables["transcripts"].current_manifest()["checkpoint_seq"],
+            sink.topic_state()["checkpoint_seq"],
+        }
+
+    # the finish barrier cuts between marks; its promise is the first mark
+    # covering it (R@130, seq 5)
+    assert schedules(125) == [[110, 125]] * 3
+    assert [fe.checkpoint_ts() for fe in front_ends] == [125] * 3
+    assert promises() == {5}
+    assert schedules(None) == [[130, 140]] * 3
+    assert promises() == {7}

@@ -40,8 +40,8 @@ def test_mq_changefeed_lossless_ordered_with_ddl_broadcast(feed, tmp_path, spark
 
     sink = FileMQSink(str(tmp_path / "topic"), n_partitions=4)
     cf = MQChangefeed(feed.log_path, sink)
-    epochs = cf.run(spark)
-    assert len(epochs) == 1 and epochs[0]["published"]
+    epochs = cf.run(spark).epochs
+    assert len(epochs) == 1 and epochs[0].committed
 
     dml = _dml_rows(feed.log_path)
     topic = cf.sink.read_topic(spark)
@@ -80,7 +80,7 @@ def test_mq_changefeed_lossless_ordered_with_ddl_broadcast(feed, tmp_path, spark
     cks = part.filter(F.col("kind") == "checkpoint").collect()
     assert len(cks) == 4
     assert {json.loads(r["value"])["resolved_ts"] for r in cks} == {
-        epochs[0]["barrier_ts"]
+        epochs[0].barrier_ts
     }
 
     # offsets are dense: manifest tail == max offset + 1 per partition
@@ -90,7 +90,7 @@ def test_mq_changefeed_lossless_ordered_with_ddl_broadcast(feed, tmp_path, spark
         assert state["offsets"][str(p)] == tail + 1
 
     # resume: everything published => no new epochs
-    assert cf.run(spark) == []
+    assert cf.run(spark).epochs == []
 
 
 @pytest.mark.parametrize("protocol", ["open-json", "maxwell", "canal-json", "avro", "canal-pb", "craft"])
@@ -110,7 +110,7 @@ def test_topic_relay_replays_to_same_table(feed, tmp_path, spark, protocol):
     sink = FileMQSink(str(tmp_path / f"relay_topic_{protocol}"), n_partitions=4)
     src_epochs = MQChangefeed(feed.log_path, sink, protocol=protocol).run(
         spark, barrier_stride=1
-    )
+    ).epochs
     assert len(src_epochs) > 1  # multi-epoch publish
 
     log2 = topic_to_log(spark, sink, str(tmp_path / f"relay_log_{protocol}"))
@@ -141,8 +141,8 @@ def test_mq_protocol_envelopes(feed, tmp_path, spark, protocol, op_names):
 
     sink = FileMQSink(str(tmp_path / f"topic_{protocol}"), n_partitions=2)
     cf = MQChangefeed(feed.log_path, sink, protocol=protocol)
-    epochs = cf.run(spark)
-    assert epochs and epochs[0]["published"]
+    epochs = cf.run(spark).epochs
+    assert epochs and epochs[0].committed
     rows = cf.sink.read_topic(spark).filter(F.col("kind") == "row").collect()
     assert len(rows) == len(_dml_rows(feed.log_path))
     types = {json.loads(r["value"])["type"] for r in rows}
@@ -285,8 +285,8 @@ def test_mq_publish_validation_floor_and_restart_detection(tmp_path, spark, monk
                             control_sidecar=False)
     sink = FileMQSink(str(tmp_path / "topic"), n_partitions=2)
     cf = MQChangefeed(log_dir, sink)
-    epochs = cf.run(spark)
-    assert [e["barrier_ts"] for e in epochs] == [180]
+    epochs = cf.run(spark).epochs
+    assert [e.barrier_ts for e in epochs] == [180]
     state = sink.topic_state()
     assert state["checkpoint_seq"] == 3  # the R@180 promise seq
 
@@ -300,7 +300,7 @@ def test_mq_publish_validation_floor_and_restart_detection(tmp_path, spark, monk
         return real(spark_, log, marks, seq_floor=seq_floor)
 
     monkeypatch.setattr(engine_mod, "validate_resolved_contract", spy)
-    assert cf.run(spark) == []  # nothing new to publish
+    assert cf.run(spark).epochs == []  # nothing new to publish
     assert seen["floor"] == 3
     assert (3, 180) in seen["marks"]  # committed promise re-enters the marks
 
@@ -392,8 +392,8 @@ def test_avro_schema_registry_versioning(tmp_path, spark):
     sink = FileMQSink(str(tmp_path / "topic"), n_partitions=2)
     epochs = MQChangefeed(log_dir, sink, protocol="avro").run(
         spark, barrier_stride=1
-    )
-    assert [e["barrier_ts"] for e in epochs] == [150, 300]
+    ).epochs
+    assert [e.barrier_ts for e in epochs] == [150, 300]
 
     # the manifest IS the registry: both versions registered, distinct ids,
     # and version 2's writer schema carries the added column
@@ -440,7 +440,7 @@ def test_avro_schema_registry_versioning(tmp_path, spark):
 
     # resume restores the registry from the manifest: nothing new → no-op,
     # registry state untouched
-    assert MQChangefeed(log_dir, sink, protocol="avro").run(spark) == []
+    assert MQChangefeed(log_dir, sink, protocol="avro").run(spark).epochs == []
     assert sink.topic_state()["avro_ids"] == {"1": 1, "2": 2}
 
 
@@ -549,8 +549,8 @@ def test_streaming_mq_publish_drains_and_relays(feed, tmp_path, spark):
     cf = MQChangefeed(feed.log_path, sink)
     sc = StreamingChangefeed(cf, str(tmp_path / "stream_ckpt"))
     epochs = sc.run_available(spark)
-    # messages counts rows + the per-partition ddl/checkpoint broadcasts
-    assert epochs and sum(e["messages"] for e in epochs) >= len(
+    # dml_events counts exactly the row messages published
+    assert epochs and sum(e.dml_events for e in epochs) == len(
         _dml_rows(feed.log_path)
     )
     rows = sink.read_topic(spark).filter(F.col("kind") == "row")
@@ -571,7 +571,7 @@ def test_streaming_mq_publish_drains_and_relays(feed, tmp_path, spark):
 
     # everything published — a fresh drain discovers nothing new
     sc2 = StreamingChangefeed(cf, str(tmp_path / "stream_ckpt2"))
-    assert sum(e["messages"] for e in sc2.run_available(spark)) == 0
+    assert sum(e.dml_events for e in sc2.run_available(spark)) == 0
 
 
 def test_binary_wire_roundtrip_edge_strings(spark):

@@ -93,8 +93,8 @@ def test_mq_dense_partitions_beyond_cores(spark, tmp_path):
         n_changes=3000, seed=9, resolved_every=1500,
     )
     sink = FileMQSink(str(tmp_path / "topic64"), n_partitions=64)
-    epochs = MQChangefeed(feed.log_path, sink).run(spark)
-    assert epochs and epochs[-1]["barrier_ts"] == feed.max_commit_ts
+    epochs = MQChangefeed(feed.log_path, sink).run(spark).epochs
+    assert epochs and epochs[-1].barrier_ts == feed.max_commit_ts
 
     state = sink.topic_state()
     agg = (

@@ -79,8 +79,9 @@ def test_multi_table_replay_matches_per_table_oracle(spark, tmp_path):
     eng.bootstrap(spark, {"alpha": os.path.dirname(base_a),
                           "beta": os.path.dirname(base_b)})
     stats = eng.run(spark, barrier_stride=1)
-    assert len(stats["alpha"].epochs) == 3 and len(stats["beta"].epochs) == 3
-    assert all(e.committed for s in stats.values() for e in s.epochs)
+    per = [e.target for e in stats.epochs]
+    assert per.count("alpha") == 3 and per.count("beta") == 3
+    assert all(e.committed for e in stats.epochs)
 
     got_a = eng.final_state(spark, "alpha").toPandas()
     got_b = eng.final_state(spark, "beta").toPandas()
@@ -118,8 +119,9 @@ def test_multi_table_mixed_progress_resume(spark, tmp_path):
     # resume with a FRESH engine: beta replays barrier 2, alpha skips it
     eng2 = _engine(tmp_path, log_dir)
     stats = eng2.run(spark, barrier_stride=1)
-    assert all(e.committed for s in stats.values() for e in s.epochs)
-    assert len(stats["beta"].epochs) == len(stats["alpha"].epochs) + 1
+    assert all(e.committed for e in stats.epochs)
+    per = [e.target for e in stats.epochs]
+    assert per.count("beta") == per.count("alpha") + 1
     assert_tables_equal(
         eng2.final_state(spark, "alpha").toPandas(),
         sequential_apply(base_a, log_dir, source_tables={"app.alpha"}),
@@ -574,7 +576,7 @@ def test_online_ddl_ghost_stash_applies_at_rename(spark, tmp_path):
     )
     # second migration of the same table re-uses the ghost name: the first
     # stash was consumed at its rename, nothing re-applies
-    assert eng2.run(spark)["users"].epochs == []
+    assert eng2.run(spark).epochs == []
 
 
 def test_online_ddl_config_surface(tmp_path):

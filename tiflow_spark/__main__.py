@@ -5,13 +5,15 @@ The analogue of the reference's ``cdc cli changefeed`` verbs
 TOML config (tiflow_spark.config):
 
 - ``create --config x.toml``  bootstrap the target table(s) from the
-  configured full dump, then replay to the newest resolved barrier.
+  configured full dump (lake sinks; a topic has none), then replay to the
+  newest resolved barrier.
 - ``run --config x.toml``     resume replay from the committed checkpoint
   (no bootstrap; crash-safe — the manifest fence makes re-runs exact).
 - ``query --config x.toml``   print the changefeed's status as JSON:
   per-table checkpoint ts/seq, epoch, schema version, per-bucket lineage,
   sync points (``cdc cli changefeed query`` analogue — the state lives in
-  the lake manifest instead of etcd).
+  the lake manifest instead of etcd); for an MQ sink, the topic manifest
+  (offsets + barrier).
 - ``stream --config x.toml``  tail the log with the Structured Streaming
   front-end: drain everything currently in the log (availableNow) by
   default, or stay up ticking every ``--trigger N`` seconds. Bootstraps
@@ -19,6 +21,7 @@ TOML config (tiflow_spark.config):
 - ``gc --config x.toml``      expire manifests older than the last
   ``gc-keep-last`` epochs and delete unreferenced data files (the C4 GC
   safepoint, cdc/owner/changefeed.go:253-270 — manifest-level, no Spark).
+  Lake sinks only, like ``validate``: a topic has no snapshots or digests.
 - ``pause / resume --config x.toml``  flip the changefeed's admin state
   (pkg/cmd/cli/cli_changefeed_pause.go/_resume.go): a paused feed's
   ``run``/``stream`` refuse until resumed. Like the reference — where the
@@ -77,12 +80,9 @@ def _session(master: str):
 
 
 def _bootstrap(spark, cfg: ChangefeedConfig, engine) -> None:
+    if cfg.sink_type == "mq":
+        return  # a topic has no full dump to restore
     if cfg.multi_table:
-        if cfg.bootstrap_chunk_files:
-            raise SystemExit(
-                "bootstrap-chunk-files is a single-table option (multi-table "
-                "dumps restore per-table; chunk each table's feed instead)"
-            )
         bases = {r.target: r.base for r in cfg.routes if r.base}
         engine.bootstrap(spark, bases, start_ts=cfg.start_ts)
     else:
@@ -105,36 +105,33 @@ def _gc(cfg: ChangefeedConfig, engine) -> dict:
     return engine.table.expire_snapshots(keep_last=cfg.gc_keep_last)
 
 
+def _summary(stats) -> dict:
+    """One result line for every front end, from its RunStats: epochs
+    applied (one per target per barrier), events applied or published,
+    newest barrier."""
+    return {
+        "epochs": len(stats.epochs),
+        "events": stats.total_events,
+        "barrier_ts": stats.epochs[-1].barrier_ts if stats.epochs else None,
+    }
+
+
 def _run(spark, cfg: ChangefeedConfig, engine) -> dict:
-    if cfg.multi_table:
-        if cfg.target_ts or cfg.syncpoint_every:
-            raise SystemExit(
-                "target-ts / syncpoint-every are single-table options "
-                "(per-table barriers in multi-table mode are not supported)"
-            )
-        stats = engine.run(
-            spark,
-            barrier_stride=cfg.barrier_stride,
-            validate_resolved=cfg.validate_resolved,
-        )
-        return {
-            name: {"epochs": len(st.epochs), "events": st.total_events}
-            for name, st in stats.items()
-        }
-    stats = engine.run(
+    return _summary(engine.run(
         spark,
         barrier_stride=cfg.barrier_stride,
         target_ts=cfg.target_ts,
         validate_resolved=cfg.validate_resolved,
         syncpoint_every=cfg.syncpoint_every,
-    )
-    return {"epochs": len(stats.epochs), "events": stats.total_events}
+    ))
 
 
 def _query(cfg: ChangefeedConfig, engine) -> dict:
     from tiflow_spark.lifecycle import read_state
 
     admin = read_state(cfg.target)["state"]
+    if cfg.sink_type == "mq":
+        return {**engine.sink.topic_state(), "state": admin}
 
     def table_status(table) -> dict:
         m = table.current_manifest()
@@ -153,12 +150,10 @@ def _query(cfg: ChangefeedConfig, engine) -> dict:
         }
 
     if cfg.multi_table:
-        per = {name: table_status(t) for name, t in engine.tables.items()}
-        chks = [s["checkpoint_ts"] for s in per.values() if "checkpoint_ts" in s]
         return {
             "changefeed": cfg.log,
-            "checkpoint_ts": min(chks) if chks else None,  # owner's view
-            "tables": per,
+            "checkpoint_ts": engine.checkpoint_ts(),  # owner's view
+            "tables": {n: table_status(t) for n, t in engine.tables.items()},
         }
     return {"changefeed": cfg.log, **table_status(engine.table)}
 
@@ -166,6 +161,7 @@ def _query(cfg: ChangefeedConfig, engine) -> dict:
 def _stream(spark, cfg: ChangefeedConfig, engine, trigger: float | None) -> dict:
     import os
 
+    from tiflow_spark.engine import RunStats
     from tiflow_spark.streaming.changefeed_stream import StreamingChangefeed
 
     sc = StreamingChangefeed(
@@ -178,91 +174,7 @@ def _stream(spark, cfg: ChangefeedConfig, engine, trigger: float | None) -> dict
         q.awaitTermination()  # until interrupted
     else:
         sc.run_available(spark)
-    return {
-        "epochs": len(sc.epochs),
-        "events": sum(e.dml_events + e.ddl_events for e in sc.epochs),
-    }
-
-
-def _main_mq(a, cfg: ChangefeedConfig, engine) -> int:
-    """MQ-sink changefeed: create/run publish outstanding barriers to the
-    topic; query prints the topic manifest (offsets + barrier)."""
-    unsupported = [
-        name for name, v in (
-            ("target-ts", cfg.target_ts),
-            ("syncpoint-every", cfg.syncpoint_every),
-            ("start-ts", cfg.start_ts or None),
-            ("base", cfg.base),
-            ("validate-state", cfg.validate_state),
-            ("validate-rows", cfg.validate_rows),
-        ) if v
-    ]
-    if unsupported:
-        # ignoring configured options would let the user believe they took
-        # effect — fail like the multi-table branch does
-        raise SystemExit(
-            f"[sink] type='mq' does not support: {', '.join(unsupported)}"
-        )
-    if a.verb == "query":
-        from tiflow_spark import lifecycle
-
-        state = dict(engine.sink.topic_state())
-        state["state"] = lifecycle.read_state(cfg.target)["state"]
-        print(json.dumps(state, indent=2, sort_keys=True))
-        return 0
-    if a.verb in ("gc", "validate"):
-        raise SystemExit(f"{a.verb} is not supported for [sink] type='mq'")
-    from tiflow_spark import lifecycle
-
-    if a.verb == "stream":
-        # Structured-Streaming tail → topic publish: the same front-end as
-        # the lake sink (StreamingChangefeed only needs read_log /
-        # committed_promises / advance_to, which MQChangefeed provides)
-        import os
-
-        from tiflow_spark.streaming.changefeed_stream import StreamingChangefeed
-
-        lifecycle.check_runnable(cfg.target)
-        spark = _session(a.master)
-        try:
-            sc = StreamingChangefeed(
-                engine,
-                cfg.stream_checkpoint or os.path.join(cfg.target, "_stream_ckpt"),
-                max_files_per_trigger=cfg.max_files_per_trigger,
-            )
-            if a.trigger:
-                q = sc.start(spark, trigger_seconds=a.trigger)
-                q.awaitTermination()
-            else:
-                sc.run_available(spark)
-            print(json.dumps({"verb": "stream", "result": {
-                "epochs": len(sc.epochs),
-                "messages": sum(e.get("messages", 0) for e in sc.epochs),
-                "barrier_ts": sc.epochs[-1]["barrier_ts"] if sc.epochs else None,
-            }}))
-        finally:
-            spark.stop()
-        return 0
-
-    if a.verb == "create":
-        lifecycle.activate(cfg.target)
-    else:
-        lifecycle.check_runnable(cfg.target)
-    spark = _session(a.master)
-    try:
-        epochs = engine.run(
-            spark,
-            barrier_stride=cfg.barrier_stride,
-            validate_resolved=cfg.validate_resolved,
-        )
-        print(json.dumps({"verb": a.verb, "result": {
-            "epochs": len(epochs),
-            "messages": sum(e["messages"] for e in epochs),
-            "barrier_ts": epochs[-1]["barrier_ts"] if epochs else None,
-        }}))
-    finally:
-        spark.stop()
-    return 0
+    return _summary(RunStats(sc.epochs))
 
 
 def main(argv=None) -> int:
@@ -291,7 +203,10 @@ def main(argv=None) -> int:
     if not a.config:
         raise SystemExit(f"{a.verb} requires --config")
 
-    cfg = load_config(a.config)
+    try:
+        cfg = load_config(a.config)
+    except (ValueError, OSError) as e:  # bad or refused config, missing log
+        raise SystemExit(f"{a.config}: {e}")
 
     # lifecycle verbs: metadata-only, sink-agnostic, no Spark session
     if a.verb in ("pause", "resume", "remove"):
@@ -313,12 +228,11 @@ def main(argv=None) -> int:
 
     engine = build_engine(cfg)
 
-    if cfg.sink_type == "mq":
-        return _main_mq(a, cfg, engine)
-
     if a.verb == "query":  # no Spark session needed — manifests are files
         print(json.dumps(_query(cfg, engine), indent=2, sort_keys=True))
         return 0
+    if a.verb in ("gc", "validate") and cfg.sink_type == "mq":
+        raise SystemExit(f"{a.verb} is not supported for [sink] type='mq'")
     if a.verb == "gc":  # manifest-level too — no Spark session
         print(json.dumps({"verb": "gc", "result": _gc(cfg, engine)}))
         return 0
@@ -353,16 +267,11 @@ def main(argv=None) -> int:
 
     spark = _session(a.master)
     try:
-        if a.verb == "create":
+        if a.verb == "create" or (
+            a.verb == "stream" and engine.checkpoint_ts() is None
+        ):
             _bootstrap(spark, cfg, engine)
         if a.verb == "stream":
-            table = engine.tables if cfg.multi_table else engine.table
-            missing = (
-                any(not t.exists() for t in table.values())
-                if cfg.multi_table else not table.exists()
-            )
-            if missing:
-                _bootstrap(spark, cfg, engine)
             result = _stream(spark, cfg, engine, a.trigger)
         else:
             result = _run(spark, cfg, engine)

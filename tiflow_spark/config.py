@@ -81,8 +81,15 @@ class ChangefeedConfig:
         return bool(self.routes)
 
 
-def _norm(key: str) -> str:
-    return key.replace("-", "_")
+# top-level keys a changefeed mode refuses when set
+_REFUSED = {
+    # a topic has no full dump, no per-table barriers and no lake state to
+    # validate
+    "mq": ("target-ts", "syncpoint-every", "start-ts", "base",
+           "validate-state", "validate-rows", "routes"),
+    # multi-table dumps restore per table, and barriers are changefeed-wide
+    "multi-table": ("bootstrap-chunk-files", "target-ts", "syncpoint-every"),
+}
 
 
 def load_config(path: str) -> ChangefeedConfig:
@@ -103,6 +110,14 @@ def load_config(path: str) -> ChangefeedConfig:
     if unknown:
         raise ValueError(f"unknown config keys: {sorted(unknown)}")
 
+    sink = raw.get("sink", {})
+    s_unknown = set(sink) - {"type", "partitions", "protocol"}
+    if s_unknown:
+        raise ValueError(f"unknown [sink] keys: {sorted(s_unknown)}")
+    sink_type = sink.get("type", "lake")
+    if sink_type not in ("lake", "mq"):
+        raise ValueError(f"[sink] type must be 'lake' or 'mq', got {sink_type!r}")
+
     filt = raw.get("filter", {})
     f_unknown = set(filt) - {"ignore-txn-start-ts", "event-filter",
                              "sql-patterns"}
@@ -116,19 +131,18 @@ def load_config(path: str) -> ChangefeedConfig:
             raise ValueError(
                 f"[filter] sql-patterns: bad regex {pat!r}: {e}"
             ) from None
-    if sql_patterns and raw.get("sink", {}).get("type") == "mq":
+    if sql_patterns and sink_type == "mq":
         raise ValueError(
             "[filter] sql-patterns applies to the lake apply path only "
             "(DM syncer vocabulary); the MQ sink publishes every DDL"
         )
-
-    sink = raw.get("sink", {})
-    s_unknown = set(sink) - {"type", "partitions", "protocol"}
-    if s_unknown:
-        raise ValueError(f"unknown [sink] keys: {sorted(s_unknown)}")
-    sink_type = sink.get("type", "lake")
-    if sink_type not in ("lake", "mq"):
-        raise ValueError(f"[sink] type must be 'lake' or 'mq', got {sink_type!r}")
+    # options a mode cannot honour are refused, not ignored: a user would
+    # believe they took effect
+    mode = ("mq" if sink_type == "mq"
+            else "multi-table" if raw.get("routes") else "single-table")
+    refused = [k for k in _REFUSED.get(mode, ()) if raw.get(k)]
+    if refused:
+        raise ValueError(f"{mode} changefeeds do not support: {', '.join(refused)}")
 
     routes = []
     for r in raw.get("routes", []):
@@ -192,8 +206,6 @@ def build_engine(cfg: ChangefeedConfig):
     if cfg.sink_type == "mq":
         from tiflow_spark.sinks.mq import FileMQSink, MQChangefeed
 
-        if cfg.multi_table:
-            raise ValueError("[sink] type='mq' does not support [[routes]]")
         return MQChangefeed(
             cfg.log,
             FileMQSink(cfg.target, n_partitions=cfg.sink_partitions),

@@ -30,7 +30,7 @@ at-least-once delivery + idempotent apply, the reference's own formula
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -163,41 +163,25 @@ def write_control_coverage(log_path: str) -> None:
 def read_control(spark, log_path: str, low_ts: int, cols) -> list:
     """Control rows (R + DDL) above ``low_ts``, ordered by (commit_ts,
     seq); ``cols`` must include both. Prefers the ``log/_control`` sidecar
-    — the producer mirrors control rows there (the generator and test
-    helpers both do), and the underscore prefix hides it from the main data
-    scan — so the control plane reads a handful of rows
-    instead of scanning the whole log for them (at 10^10 events the full
-    scan would dominate the epoch loop). Logs without a sidecar (raw
-    appends) fall back to the full scan — as does a *stale* sidecar: if the
-    log grew segments after the sidecar was last written (a producer
-    appended data without mirroring control rows, e.g. a raw tail after
-    generation), its R/DDL rows would be invisible and the checkpoint would
-    silently stall. Staleness check: the ``_COVERAGE`` high-watermark
-    (segment count at sidecar write time, one name listing — no stats);
-    sidecars from older producers without one fall back to the mtime walk.
-    Producers that want the fast path must call ``write_control_coverage``
-    after appending sidecar segments — the generator does."""
+    — the producer mirrors control rows there, and the underscore prefix
+    hides it from the main data scan — so the control plane reads a
+    handful of rows instead of scanning the whole log for them (at 10^10
+    events the full scan would dominate the epoch loop). The sidecar is
+    trusted only while its ``_COVERAGE`` high-watermark (the segment count
+    ``write_control_coverage`` recorded) still covers every log segment:
+    a log with no sidecar or no ``_COVERAGE``, or one that grew segments
+    after the sidecar was written (a raw tail appended without mirroring
+    its control rows), takes the full scan — otherwise its R/DDL rows would
+    be invisible and the checkpoint would silently stall."""
     import os
 
-    def _max_mtime(d):
-        newest = -1.0
-        for root, dirs, files in os.walk(d):
-            dirs[:] = [x for x in dirs if not x.startswith("_")]
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    newest = max(newest, os.path.getmtime(os.path.join(root, fn)))
-        return newest
-
     ctl_dir = os.path.join(log_path, "_control")
+    cov_fp = os.path.join(ctl_dir, "_COVERAGE")
     src_path = log_path
-    if os.path.isdir(ctl_dir):
-        cov_fp = os.path.join(ctl_dir, "_COVERAGE")
-        if os.path.exists(cov_fp):
-            with open(cov_fp) as f:
-                covered = int(json.load(f).get("n_segments", -1))
-            if count_log_segments(log_path) <= covered:
-                src_path = ctl_dir
-        elif _max_mtime(ctl_dir) >= _max_mtime(log_path):
+    if os.path.exists(cov_fp):
+        with open(cov_fp) as f:
+            covered = int(json.load(f).get("n_segments", -1))
+        if count_log_segments(log_path) <= covered:
             src_path = ctl_dir
     src = spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(src_path)
     rows = (
@@ -214,11 +198,18 @@ def read_control(spark, log_path: str, low_ts: int, cols) -> list:
 
 @dataclass
 class EpochStats:
+    """One epoch applied to one target, by any front end. For an MQ topic,
+    ``dml_events`` counts the row messages published, ``ddl_events`` the
+    DDLs broadcast, and ``committed`` whether the epoch was published."""
+
     epoch: int
     barrier_ts: int
     dml_events: int
     ddl_events: int
     committed: bool
+    # the target the epoch loop applied it to (its ``_states`` key): a lake
+    # table path, a routed table name or a topic path
+    target: str | None = None
 
 
 @dataclass
@@ -449,8 +440,60 @@ class EpochDriver:
         (None records none). The streaming tick's unit: it discovers and
         validates its marks itself (StreamingChangefeed._apply_batch), so
         nothing is validated here."""
-        out = self._drive(spark, max_epochs=1, mark=(barrier_seq, barrier_ts))
-        return [st for _, st in out]
+        return self._drive(spark, max_epochs=1, mark=(barrier_seq, barrier_ts))
+
+    def checkpoint_ts(self) -> int | None:
+        """The changefeed checkpoint: the min over its targets' committed
+        checkpoints (the owner's view, cdc/owner/changefeed.go:125-170);
+        None until every target is bootstrapped."""
+        states = self._states().values()
+        if any(st is None for st in states):
+            return None
+        return min(st["checkpoint_ts"] for st in states)
+
+    def run(
+        self,
+        spark: SparkSession,
+        max_epochs: int | None = None,
+        barrier_stride: int = 0,
+        target_ts: int | None = None,
+        validate_resolved: bool = True,
+        syncpoint_every: int | None = None,
+    ) -> RunStats:
+        """Process outstanding barriers (the epoch loop is ``_drive``'s,
+        the policy ``plan_epoch``'s); one EpochStats per (epoch, target)
+        applied. ``barrier_stride=0`` coalesces ALL outstanding resolved-ts
+        marks into one epoch (max throughput); ``barrier_stride=1`` takes
+        one epoch per resolved-ts mark (max granularity / latency); k>1
+        coalesces k marks per epoch. A target already at/ahead of a barrier
+        (it committed before a crash; others did not) skips that barrier —
+        the per-target fence makes mixed-progress resume exact.
+
+        ``syncpoint_every``: emit a sync point at least every that many ts
+        units of progress (TiCDC's syncPointBarrier,
+        cdc/owner/barrier.go:28-29 + cdc/owner/changefeed.go:271-272,483):
+        epoch coalescing never skips past the next sync target; the epoch
+        that lands on it records ``(primary_ts=barrier, epoch)`` in the
+        manifest's ``syncpoints`` list, so upstream at primary_ts and the
+        downstream snapshot at that epoch can be diffed exactly (the
+        ``syncpoint_v1`` table analogue — the manifest IS our downstream
+        metadata table).
+
+        ``target_ts``: finish barrier (cdc/owner/changefeed.go:456-501
+        min(ddl, sync-point, finish)): replay stops once the checkpoint
+        reaches target_ts; events beyond it are never applied. The cut at
+        target_ts itself only happens when some resolved-ts covers it
+        (completeness at target is otherwise unknown).
+
+        ``validate_resolved``: enforce the resolved-ts contract before
+        applying (see ResolvedTsRegression) — one extra column-pruned scan
+        per run; a feed that violates it is refused, not applied.
+        """
+        return RunStats(self._drive(
+            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
+            target_ts=target_ts, validate_resolved=validate_resolved,
+            syncpoint_every=syncpoint_every,
+        ))
 
     def _drive(
         self,
@@ -461,9 +504,10 @@ class EpochDriver:
         validate_resolved: bool = False,
         syncpoint_every: int | None = None,
         mark: tuple[int | None, int] | None = None,
-    ) -> list[tuple[str, object]]:
+    ) -> list[EpochStats]:
         """Plan and apply epochs until none is outstanding (or
-        ``max_epochs`` rounds); returns ``(target, stats)`` per apply.
+        ``max_epochs`` rounds); returns one EpochStats per apply, tagged
+        with its target.
 
         ONE control-plane read per call: R barriers + DDL rows above the
         lowest checkpoint (from 0 with online-DDL on: the stash plan needs
@@ -502,7 +546,7 @@ class EpochDriver:
         if mark is not None:
             control = [r for r in control if r["op"] == OP_DDL]
             control.append(Row(op=OP_RESOLVED, commit_ts=mark[1], seq=mark[0]))
-        out: list[tuple[str, object]] = []
+        out: list[EpochStats] = []
         rounds, last = 0, None
         while max_epochs is None or rounds < max_epochs:
             plan = plan_epoch(
@@ -514,9 +558,9 @@ class EpochDriver:
             for name in plan.targets:
                 chk = states[name]["checkpoint_ts"]
                 ddl_rows = [r for r in plan.ddl_rows if r["commit_ts"] > chk]
-                out.append((name, self._apply_epoch(
+                out.append(replace(self._apply_epoch(
                     spark, log, name, states[name], plan, ddl_rows
-                )))
+                ), target=name))
             rounds, last = rounds + 1, plan.barrier_ts
             states = self._states()
         return out
@@ -630,48 +674,6 @@ class ChangefeedEngine(EpochDriver):
             spark, log, state, plan.barrier_ts, ddl_rows=ddl_rows,
             barrier_seq=plan.barrier_seq, syncpoint=plan.syncpoint,
         )
-
-    def run(
-        self,
-        spark: SparkSession,
-        max_epochs: int | None = None,
-        barrier_stride: int = 0,
-        target_ts: int | None = None,
-        validate_resolved: bool = True,
-        syncpoint_every: int | None = None,
-    ) -> RunStats:
-        """Process outstanding barriers (the epoch loop is EpochDriver's,
-        the policy ``plan_epoch``'s). ``barrier_stride=0`` coalesces ALL
-        outstanding resolved-ts marks into one epoch (max throughput);
-        ``barrier_stride=1`` takes one epoch per resolved-ts mark (max
-        granularity / latency); k>1 coalesces k marks per epoch.
-
-        ``syncpoint_every``: emit a sync point at least every that many ts
-        units of progress (TiCDC's syncPointBarrier,
-        cdc/owner/barrier.go:28-29 + cdc/owner/changefeed.go:271-272,483):
-        epoch coalescing never skips past the next sync target; the epoch
-        that lands on it records ``(primary_ts=barrier, epoch)`` in the
-        manifest's ``syncpoints`` list, so upstream at primary_ts and the
-        downstream snapshot at that epoch can be diffed exactly (the
-        ``syncpoint_v1`` table analogue — the manifest IS our downstream
-        metadata table).
-
-        ``target_ts``: finish barrier (cdc/owner/changefeed.go:456-501
-        min(ddl, sync-point, finish)): replay stops once the checkpoint
-        reaches target_ts; events beyond it are never applied. The cut at
-        target_ts itself only happens when some resolved-ts covers it
-        (completeness at target is otherwise unknown).
-
-        ``validate_resolved``: enforce the resolved-ts contract before
-        applying (see ResolvedTsRegression) — one extra column-pruned scan
-        per run.
-        """
-        out = self._drive(
-            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
-            target_ts=target_ts, validate_resolved=validate_resolved,
-            syncpoint_every=syncpoint_every,
-        )
-        return RunStats([st for _, st in out])
 
     def run_epoch(
         self,
@@ -1081,10 +1083,6 @@ class MultiTableEngine(EpochDriver):
                 spark, spark.read.parquet(base_parquet), reg, checkpoint_ts=start_ts
             )
 
-    def checkpoint_ts(self) -> int:
-        """Changefeed checkpoint = min over per-table checkpoints."""
-        return min(m["checkpoint_ts"] for m in self._states().values())
-
     # ------------------------------------------------------------------ run
     def _states(self) -> dict[str, dict | None]:
         return {name: t.current_manifest() for name, t in self.tables.items()}
@@ -1100,25 +1098,6 @@ class MultiTableEngine(EpochDriver):
             ddl_rows=[r for r in ddl_rows if self.route_name(r["tbl"]) == name],
             barrier_seq=plan.barrier_seq, syncpoint=plan.syncpoint,
         )
-
-    def run(
-        self,
-        spark: SparkSession,
-        max_epochs: int | None = None,
-        barrier_stride: int = 0,
-        validate_resolved: bool = True,
-    ) -> dict[str, RunStats]:
-        """Process outstanding barriers for every target table; returns
-        per-table RunStats. A table already at/ahead of a barrier (it
-        committed before a crash; others did not) skips that barrier — the
-        per-table manifest fence makes mixed-progress resume exact."""
-        stats = {name: RunStats() for name in self.tables}
-        for name, st in self._drive(
-            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
-            validate_resolved=validate_resolved,
-        ):
-            stats[name].epochs.append(st)
-        return stats
 
     def final_state(self, spark: SparkSession, name: str) -> DataFrame:
         return self.tables[name].read(spark)

@@ -146,21 +146,16 @@ def list_changefeeds(config_dir: str) -> list[dict]:
         engine = build_engine(cfg)
         if cfg.sink_type == "mq":
             ts = engine.sink.topic_state()
-            row["checkpoint_ts"] = ts.get("barrier_ts")
-            row["epoch"] = ts.get("epoch", 0)
             row["protocol"] = ts.get("protocol") or engine.protocol
-        elif cfg.multi_table:
-            ms = [t.current_manifest() for t in engine.tables.values()]
-            done = [m for m in ms if m is not None]
-            row["checkpoint_ts"] = (
-                min(m["checkpoint_ts"] for m in done) if len(done) == len(ms)
-                else None
-            )
-            row["epoch"] = min((m["epoch"] for m in done), default=None)
+            # a topic has a checkpoint once its first epoch is published
+            row["checkpoint_ts"] = ts.get("barrier_ts")
         else:
-            m = engine.table.current_manifest()
-            row["checkpoint_ts"] = m["checkpoint_ts"] if m else None
-            row["epoch"] = m["epoch"] if m else None
+            row["checkpoint_ts"] = engine.checkpoint_ts()
+        # one rule (EpochDriver.checkpoint_ts): checkpoint and epoch stay
+        # null until every target has a manifest
+        row["epoch"] = None if row["checkpoint_ts"] is None else min(
+            st["epoch"] for st in engine._states().values()
+        )
         if row["checkpoint_ts"] is None and row["state"] == STATE_NORMAL:
             row["state"] = "not bootstrapped"
         rows.append(row)

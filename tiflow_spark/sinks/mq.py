@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tiflow_spark.engine import EpochDriver
+from tiflow_spark.engine import EpochDriver, EpochStats
 from tiflow_spark.functions.hashing import md5_bucket
 from tiflow_spark.model import DML_OPS, event_order_cols
 from tiflow_spark.operators.filters import engine_event_filters
@@ -791,7 +791,7 @@ class MQChangefeed(EpochDriver):
             "checkpoint_seq": int(st.get("checkpoint_seq", -1)),
         }}
 
-    def _apply_epoch(self, spark, log, name, state, plan, ddl_rows) -> dict:
+    def _apply_epoch(self, spark, log, name, state, plan, ddl_rows) -> EpochStats:
         """Publish one epoch: the slice's DML, filtered and codec-enveloped,
         then its DDLs and the checkpoint as broadcast messages."""
         dml = watermark_cut(
@@ -840,35 +840,19 @@ class MQChangefeed(EpochDriver):
             # validation floor
             barrier_seq=plan.barrier_seq, extra_state=extra_state,
         )
-        n = sum(
-            v - state["offsets"][p]
-            for p, v in self.sink.topic_state()["offsets"].items()
-        ) if published else 0
-        return {
-            "epoch": epoch, "barrier_ts": plan.barrier_ts,
-            "published": published, "messages": n,
-        }
-
-    def run(
-        self,
-        spark: SparkSession,
-        max_epochs: int | None = None,
-        barrier_stride: int = 0,
-        validate_resolved: bool = True,
-        target_ts: int | None = None,
-    ) -> list[dict]:
-        """Publish all outstanding barriers (at most up to ``target_ts``,
-        the finish barrier of ChangefeedEngine.run, when given); returns one
-        stats dict per published epoch. Same epoch loop and stride semantics
-        as the lake path (EpochDriver); ``validate_resolved`` enforces the
-        resolved-ts contract over the unpublished tail exactly like the lake
-        path (a feed that promises completeness and then violates it is
-        refused, not published)."""
-        out = self._drive(
-            spark, max_epochs=max_epochs, barrier_stride=barrier_stride,
-            target_ts=target_ts, validate_resolved=validate_resolved,
+        rows = 0
+        if published:
+            # each partition's offset grew by its row messages plus one
+            # broadcast copy of every DDL and of the checkpoint
+            grown = sum(
+                v - state["offsets"][p]
+                for p, v in self.sink.topic_state()["offsets"].items()
+            )
+            rows = grown - len(state["offsets"]) * (len(ddl_rows) + 1)
+        return EpochStats(
+            epoch=epoch, barrier_ts=plan.barrier_ts, dml_events=rows,
+            ddl_events=len(ddl_rows) if published else 0, committed=published,
         )
-        return [st for _, st in out]
 
 
 def _decode_open_json(row_msgs: DataFrame) -> DataFrame:

@@ -47,7 +47,7 @@ class StreamingChangefeed:
     (``ChangefeedEngine``), a routed set of them (``MultiTableEngine``) or
     an MQ topic (``MQChangefeed``)."""
 
-    def __init__(self, engine: "EpochDriver",
+    def __init__(self, engine: EpochDriver,
                  checkpoint_dir: str,
                  max_files_per_trigger: int | None = None,
                  validate_resolved: bool = True):
@@ -120,10 +120,10 @@ class StreamingChangefeed:
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return writer.start()
 
-    def run_available(self, spark: SparkSession):
+    def run_available(self, spark: SparkSession) -> list[EpochStats]:
         """Process everything currently in the log, then stop (the
-        streaming twin of ChangefeedEngine.run — both drain exactly up to
-        the last in-band resolved mark)."""
+        streaming twin of EpochDriver.run — both drain exactly up to the
+        last in-band resolved mark); returns the epochs applied so far."""
         q = self.start(spark, available_now=True)
         q.awaitTermination()
         return self.epochs
